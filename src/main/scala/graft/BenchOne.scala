@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: time ONE named query repeatedly (and optionally print its
   * formatted plan) — the per-query iteration loop `Bench` is too coarse
   * for. Usage:
@@ -17,15 +15,9 @@ object BenchOne {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString).toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the engine's own session: the ledger measures the config the
+    // tests and the benchmark run
+    val spark = GraftSession.local(cpus)
     val d = SparkEntry.allDefs.find(_.name == name)
       .getOrElse(sys.error(s"no such query: $name (see SparkEntry.allDefs)"))
     if (explain) d.build(spark, sfDir).explain("formatted")

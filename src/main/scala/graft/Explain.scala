@@ -1,14 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    // the engine's own session, so the printed plans are the ones the
+    // tests and the benchmark run (cache widths included)
+    val spark = GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     for (d <- SparkEntry.allDefs if args.isEmpty || args.contains(d.name)) {
       println(s"===== ${d.name} =====")

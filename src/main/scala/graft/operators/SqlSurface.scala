@@ -465,69 +465,6 @@ object SqlSurface extends QueryModule {
     try body finally spark.conf.set(key, prev)
   }
 
-  /** q226's Spark plan, block-unrolled: the recursion advances
-    * [[unrollK]] months per UnionLoop iteration. Each iteration joins
-    * the 1-row chain state to its pre-pivoted month block and computes
-    * the K intra-block steps as a chain of lateral column aliases —
-    * idx_j = idx_{j-1} * f_j written as NESTED aliases reproduces the
-    * per-month recurrence's IEEE op sequence EXACTLY (same literals,
-    * same associativity), so the result is bit-identical to the
-    * one-month-per-step form the DuckDB oracle states (no re-
-    * association, no log/exp prefix-product shortcut — those would
-    * break float parity). The ragged last block NULL-pads; coalesce
-    * carries the last computed state forward; stack() unpivots block
-    * rows back to months, and the seed month rejoins via UNION ALL.
-    */
-  private def unrolledMomentumSql(k: Int): String = {
-    val selM = (1 to k).map(j => s"s.m$j").mkString(", ")
-    val selRev = (1 to k).map(j => s"s.rev$j").mkString(", ")
-    // chain's column names carry an `a` prefix so the recursive term's
-    // lateral aliases (idx1..idxK) cannot collide with them: the
-    // analyzer resolves REAL columns before lateral aliases, and a
-    // collision silently rebinds idx_{j-1} to c.idx_{j-1} — NULL in the
-    // seed row — nulling every sub-step past the first (found the hard
-    // way: sf0.01 check read NULL from month 3 on). UNION matching is
-    // positional, so the term's own aliases are free.
-    val idxDefs = (1 to k).map { j =>
-      val pIdx = if (j == 1) "c.aidx_last" else s"idx${j - 1}"
-      val pRev = if (j == 1) "c.arev_last" else s"s.rev${j - 1}"
-      s"$pIdx * (1.0 + 0.5 * (CAST(s.rev$j AS DOUBLE) / $pRev - 1.0)) AS idx$j"
-    }.mkString(",\n    ")
-    val nullCols =
-      (1 to k).map(j => s"CAST(NULL AS DATE) AS am$j").mkString(", ") +
-        ",\n    " +
-        (1 to k).map(j => s"CAST(NULL AS BIGINT) AS arev$j").mkString(", ") +
-        ",\n    " +
-        (1 to k).map(j => s"CAST(NULL AS DOUBLE) AS aidx$j").mkString(", ")
-    val coalRev = (k to 1 by -1).map(j => s"s.rev$j")
-      .mkString("coalesce(", ", ", ", c.arev_last)")
-    val coalIdx = (k to 1 by -1).map(j => s"idx$j")
-      .mkString("coalesce(", ", ", ", c.aidx_last)")
-    val stackArgs = (1 to k).map(j => s"am$j, arev$j, aidx$j").mkString(", ")
-    s"""WITH RECURSIVE chain AS (
-       |  SELECT CAST(0 AS INT) AS b,
-       |    $nullCols,
-       |    rev AS arev_last, CAST(100.0 AS DOUBLE) AS aidx_last
-       |  FROM numbered WHERE i = 1
-       |  UNION ALL
-       |  SELECT s.b,
-       |    $selM,
-       |    $selRev,
-       |    $idxDefs,
-       |    $coalRev,
-       |    $coalIdx
-       |  FROM chain c JOIN blocks s ON s.b = c.b + 1
-       |)
-       |SELECT month, rev_cents, round(idx, 6) AS momentum_idx FROM (
-       |  SELECT stack($k, $stackArgs) AS (month, rev_cents, idx)
-       |  FROM chain WHERE b >= 1
-       |  UNION ALL
-       |  SELECT m, rev, CAST(100.0 AS DOUBLE) FROM numbered WHERE i = 1
-       |)
-       |WHERE month IS NOT NULL
-       |ORDER BY month""".stripMargin
-  }
-
   def recursiveCte(spark: SparkSession, dir: String): DataFrame = {
     // r17 (guide §1.4; VERDICT r16 #8; the r10 bounded-metadata
     // discipline): the recursion's whole state is the MONTH spine —
@@ -608,9 +545,13 @@ object SqlSurface extends QueryModule {
     * joins 1 row per step — iteration count is bounded by the
     * calendar, not the data volume.
     */
-  /** q235's Spark plan, block-unrolled exactly like
-    * [[unrolledMomentumSql]] but with the TWO coupled state columns
-    * (level, trend) advanced per sub-step. Lateral-alias reuse keeps
+  /** q235's Spark plan, block-unrolled: the recursion advances
+    * [[unrollK]] months per UnionLoop iteration, with the TWO coupled
+    * state columns (level, trend) advanced per sub-step as a chain of
+    * lateral column aliases. Each iteration joins the 1-row chain state
+    * to its pre-pivoted month block; the ragged last block NULL-pads,
+    * coalesce carries the last computed state forward, and stack()
+    * unpivots block rows back to months. Lateral-alias reuse keeps
     * the op sequence identical to the per-month form: `fc_j` IS the
     * sum (lvl+trd) the original computes inline, `lvl_j` reuses it
     * (`0.5*x + 0.5*(lvl+trd)` — same tree), and `trd_j` reuses `lvl_j`
@@ -618,13 +559,22 @@ object SqlSurface extends QueryModule {
     * definition, so bit-identical). Emission order must stay
     * interleaved (fc_j, lvl_j, trd_j per j): lateral aliases resolve
     * left-to-right, and fc_{j+1} reads lvl_j/trd_j.
+    *
+    * The chain's column names carry an `a` prefix so the recursive
+    * term's lateral aliases (lvl1..lvlK, trd1..trdK) cannot collide
+    * with them: the analyzer resolves REAL columns before lateral
+    * aliases, and a collision silently rebinds lvl_{j-1} to
+    * c.lvl_{j-1} — NULL in the seed row — nulling every sub-step past
+    * the first (found the hard way: the sf0.01 check read NULL from
+    * month 3 on). UNION matching is positional, so the term's own
+    * aliases are free.
     */
   private def unrolledHoltSql(k: Int): String = {
     val selM = (1 to k).map(j => s"s.m$j").mkString(", ")
     val selX = (1 to k).map(j => s"s.x$j").mkString(", ")
-    // same `a`-prefixed chain schema trick as unrolledMomentumSql — see
-    // the collision note there; lvl/trd aliases must resolve laterally,
-    // never to chain's own (seed-NULL) columns.
+    // `a`-prefixed chain schema (the collision note above): lvl/trd
+    // aliases must resolve laterally, never to chain's own (seed-NULL)
+    // columns.
     //
     // The chain carries TWO aliases per month, not three (r13): the
     // original emitted fc_j = pLvl + pTrd as its own lateral alias, but

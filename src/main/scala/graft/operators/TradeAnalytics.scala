@@ -1739,22 +1739,6 @@ object TradeAnalytics extends QueryModule {
       |FROM scored GROUP BY r_score, f_score, m_score
       |ORDER BY r_score, f_score, m_score""".stripMargin
 
-  /** q204: item-item collaborative filtering — cosine similarity over
-    * binary customer co-purchase vectors, the classic neighborhood
-    * recommender ("customers who bought X also bought"). cos(a,b) =
-    * |A∩B| / √(|A|·|B|) where A is the set of customers who ever bought
-    * item a. Reported: top-5 neighbors for each of the 50 most-bought
-    * items (popularity-deterministic query set).
-    *
-    * Scale shape: NEVER an item×item join — co-occurrence comes from
-    * the per-customer basket expansion (the q35 posting kernel reused
-    * via [[graft.functions.PairExpandFunctions]]): cost is Σ_c |basket_c|²,
-    * and baskets over 256 distinct items are dropped (the power-buyer
-    * cap every production CF pipeline applies — such baskets cost df²
-    * and carry near-zero signal; non-binding on this corpus and
-    * mirrored in the oracle). Neighbor ranking is a per-item window
-    * top-5 (WindowGroupLimit, partial per group).
-    */
   /** Shared capped co-purchase basket build. r17 (VERDICT r16 #5,
     * guide §2.5 two-level aggregation): the r16 shape hashed the RAW
     * (cust, item) join output on cust alone, so one pathological
@@ -1820,6 +1804,196 @@ object TradeAnalytics extends QueryModule {
     itemN.orderBy(col("n_cust").desc, col("item")).limit(k)
       .select(col("item")).collect().map(_.getLong(0))
 
+  /** The catalog broadcast-budget guard (VERDICT r12 #2, the Dedup.scala
+    * minHashLsh discipline): itemN is one row per catalog entry, and at
+    * 100 TB the catalog co-scales with traffic, so an unconditional
+    * broadcast hint eventually dies with driver OOM instead of
+    * degrading. Returns the catalog size and the hint for catalog-sized
+    * join sides: broadcast within `budget`, past it an AQE-planned
+    * shuffle join — slower, never fatal. The count is a cheap job over
+    * the already-persisted aggregate. Measured fallback cost: SCALE.md
+    * round 13. */
+  private def catalogHint(itemN: DataFrame,
+      budget: Long): (Long, DataFrame => DataFrame) = {
+    val n = itemN.count()
+    (n, df => if (n <= budget) broadcast(df) else df)
+  }
+
+  /** In-task symmetrization (r16): one explode emits both directions of
+    * each canonical (a, b) pair row as (item, neighbor) — or the names
+    * in `as` — carrying `payload`, with `keep` columns riding in front.
+    * The unionAll it replaced read the pair relation twice, which
+    * either forced a persist whose cache materialization cost more
+    * than the kernel itself (probe-measured; q217's relation is 12.7M
+    * nearly-unique rows at sf0.1) or duplicated the whole upstream plan
+    * tree through the union (q323's analyzed plan was ~190k explain
+    * lines, and planning dominated the sf0.01 wall). One read keeps the
+    * relation single-pass and fuses straight into the degree joins. */
+  private def symmetrize(pairs: DataFrame, a: String, b: String,
+      payload: Seq[String], keep: Seq[String] = Nil,
+      as: (String, String) = ("item", "neighbor")): DataFrame = {
+    val (item, neighbor) = as
+    def half(x: String, y: String): Column =
+      struct(col(x).as(item) +: col(y).as(neighbor) +: payload.map(col): _*)
+    pairs.select(keep.map(col) :+
+        explode(array(half(a, b), half(b, a))).as("s"): _*)
+      .select(keep.map(col) ++ Seq(col(s"s.$item").as(item),
+        col(s"s.$neighbor").as(neighbor)) ++
+        payload.map(p => col(s"s.$p").as(p)): _*)
+  }
+
+  /** Degree join-back: the pair kernels emit pair KEYS only (per-item
+    * degrees are functionally dependent on the ids), so each side's
+    * degree — ni for item, nn for neighbor — joins back after the
+    * aggregation from the catalog-sized dimension under `hint`. */
+  private def withDegrees(sym: DataFrame, itemN: DataFrame,
+      hint: DataFrame => DataFrame): DataFrame =
+    sym.join(hint(itemN.select(col("item"), col("n_cust").as("ni"))),
+        Seq("item"))
+      .join(hint(itemN.select(col("item").as("neighbor"),
+        col("n_cust").as("nn"))), Seq("neighbor"))
+
+  /** Exact co-purchase cosine of canonical (doc_a, doc_b, co) pair
+    * counts, symmetrized: (item, neighbor, co, ni, nn, cosine). */
+  private def cosineScored(pairs: DataFrame, itemN: DataFrame,
+      hint: DataFrame => DataFrame): DataFrame =
+    withDegrees(symmetrize(pairs, "doc_a", "doc_b", Seq("co")), itemN, hint)
+      .withColumn("cosine", col("co").cast("double") /
+        sqrt(col("ni").cast("double") * col("nn")))
+
+  /** Degree-payload posting lists for the DIMSUM kernels: degrees ride
+    * INTO the expansion (joined before the collect), so the keep/kill
+    * draw happens inside the expansion task and sampled-away pairs
+    * never reach the wire. No pre-expansion repartition (measured, the
+    * q154 discipline): the expand+md5 kernel already lands on the
+    * reduce side of this groupBy — a forced spread read wall-identical
+    * (5.05 s both ways at sf0.1) and only added a shuffle. */
+  private def degreePosts(b: DataFrame, itemN: DataFrame,
+      hint: DataFrame => DataFrame): DataFrame =
+    b.join(hint(itemN), Seq("item"))
+      .select(col("cust"), struct(col("item").as("doc_id"),
+        col("n_cust").cast("int").as("nsh")).as("e"))
+      .groupBy(col("cust")).agg(collect_list(col("e")).as("ds"))
+
+  /** The DIMSUM keep draw for an expanded pair `p` (doc_a, doc_b,
+    * nsh_a, nsh_b) of customer `cust`: emit with probability
+    * p = min(1, γ/√(nᵢnⱼ)), the Bernoulli draw being the portable md5
+    * uniform of `cust|doc_a|doc_b` mod 1e6. The ||'s left arm
+    * (p = 1 ⟺ γ ≥ √(nᵢ·nⱼ)) short-circuits the md5 for pairs sampling
+    * never touches — at toy degrees that is most pairs, at production
+    * degrees none, and the predicate VALUE is identical either way.
+    * Production swaps the portable md5 (the DuckDB-replayable oracle
+    * contract) for a native 64-bit hash. */
+  private def dimsumKeep(gamma: Double): Column = {
+    val rootProd = sqrt(
+      (col("p.nsh_a").cast("long") * col("p.nsh_b")).cast("double"))
+    val pKeep = least(lit(1.0), lit(gamma) / rootProd)
+    val u = pmod(conv(substring(md5(concat_ws("|",
+        col("cust").cast("string"), col("p.doc_a").cast("string"),
+        col("p.doc_b").cast("string"))), 1, 15), 16, 10).cast("long"),
+      lit(1000000L))
+    lit(gamma) >= rootProd || u.cast("double") < pKeep * lit(1e6)
+  }
+
+  /** The DIMSUM cosine estimate: kept emits over p·√(ni·nn), unbiased
+    * where sampling engaged and exact where p = 1. */
+  private def dimsumEstimate(emits: Column, gamma: Double): Column = {
+    val prod = sqrt((col("ni") * col("nn")).cast("double"))
+    emits.cast("double") / (least(lit(1.0), lit(gamma) / prod) * prod)
+  }
+
+  /** (min, max) of a long id column, None when it is empty — the
+    * input of [[pairCounts]]' packed-key guard. */
+  private def idRange(df: DataFrame, c: String): Option[(Long, Long)] = {
+    val r = df.agg(min(col(c)), max(col(c))).collect()(0)
+    if (r.isNullAt(1)) None else Some((r.getLong(0), r.getLong(1)))
+  }
+
+  /** Canonical within-list pair counts (a < b, co) over the distinct id
+    * lists `ds`. Packed-long pair key (r17, VERDICT r16 #2 / guide
+    * §2.3): (a << 32) | b collapses the two-long struct key to one
+    * long, and grouping on it is bijective with (a, b) exactly while
+    * every id is in [0, 2³²) — guarded here off the ids' `range`; out
+    * of range (or unknown) the struct kernel is the path, same rows.
+    * `spread` repartitions the packed keys first, which makes the
+    * aggregation COMPLETE (one reduce-side hash table, no map-side
+    * partial build): the Σbsz² keys are nearly unique, so a partial
+    * aggregation would shrink the shuffle ~3% for a full-size map-side
+    * hash table. */
+  private[graft] def pairCounts(lists: DataFrame, range: Option[(Long, Long)],
+      a: String, b: String, co: String,
+      spread: Option[Int] = None): DataFrame =
+    if (range.exists { case (lo, hi) => lo >= 0L && hi < (1L << 32) }) {
+      val keys = lists.select(explode(
+        graft.functions.PairExpandFunctions.pairExpandPackedIds(col("ds")))
+        .as("pk"))
+      spread.fold(keys)(n => keys.repartition(n, col("pk")))
+        .groupBy(col("pk"))
+        .agg(count(lit(1)).as(co))
+        .select(shiftrightunsigned(col("pk"), 32).as(a),
+          col("pk").bitwiseAND(lit(0xFFFFFFFFL)).as(b), col(co))
+    } else {
+      lists.select(explode(
+          graft.functions.PairExpandFunctions.pairExpandIds(col("ds"))).as("p"))
+        .select(col("p.id_a").as(a), col("p.id_b").as(b))
+        .groupBy(col(a), col(b))
+        .agg(count(lit(1)).as(co))
+    }
+
+  /** Per-anchor top-5 tail: rank each item's neighbors by (score desc,
+    * neighbor), keep five, report support as a bigint and the score
+    * rounded to 4 places. */
+  private def top5(scored: DataFrame, score: String, support: String,
+      supportAs: String): DataFrame = {
+    val w = Window.partitionBy(col("item"))
+      .orderBy(col(score).desc, col("neighbor"))
+    scored.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= 5)
+      .select(col("item"), col("rank"), col("neighbor"),
+        col(support).cast("bigint").as(supportAs),
+        round(col(score), 4).as(score))
+      .orderBy(col("item"), col("rank"))
+  }
+
+  /** Hard-negative candidates: each customer's basket-adjacent
+    * neighbors scored by the BEST cosine across the basket, minus the
+    * items the customer already bought. */
+  private def unseenNeighbors(baskets: DataFrame,
+      nbrs: DataFrame): DataFrame =
+    baskets.join(nbrs, Seq("item"))
+      .groupBy(col("cust"), col("neighbor"))
+      .agg(max(col("cosine")).as("score"))
+      .join(baskets.select(col("cust"), col("item").as("neighbor")),
+        Seq("cust", "neighbor"), "left_anti")
+
+  /** Per-user top-3 tail of the hard-negative miners: (score desc,
+    * neighbor) order, score rounded to 4 places. */
+  private def top3PerUser(hard: DataFrame): DataFrame = {
+    val wUser = Window.partitionBy(col("cust"))
+      .orderBy(col("score").desc, col("neighbor"))
+    hard.withColumn("rank", row_number().over(wUser))
+      .filter(col("rank") <= 3)
+      .select(col("cust").as("user_id"), col("rank"),
+        col("neighbor").as("item"), round(col("score"), 4).as("score"))
+      .orderBy(col("user_id"), col("rank"))
+  }
+
+  /** q204: item-item collaborative filtering — cosine similarity over
+    * binary customer co-purchase vectors, the classic neighborhood
+    * recommender ("customers who bought X also bought"). cos(a,b) =
+    * |A∩B| / √(|A|·|B|) where A is the set of customers who ever bought
+    * item a. Reported: top-5 neighbors for each of the 50 most-bought
+    * items (popularity-deterministic query set).
+    *
+    * Scale shape: NEVER an item×item join — co-occurrence comes from
+    * the per-customer basket expansion (the q35 posting kernel reused
+    * via [[graft.functions.PairExpandFunctions]]): cost is Σ_c |basket_c|²,
+    * and baskets over 256 distinct items are dropped (the power-buyer
+    * cap every production CF pipeline applies — such baskets cost df²
+    * and carry near-zero signal; non-binding on this corpus and
+    * mirrored in the oracle). Neighbor ranking is a per-item window
+    * top-5 (WindowGroupLimit, partial per group).
+    */
   def itemNeighbors(spark: SparkSession, dir: String): DataFrame = {
     val (posts, _, itemN) = coPurchaseBaskets(spark, dir)
     // Anchor-restricted kernel (r16, guide §1.2 step 1): the output
@@ -1838,37 +2012,14 @@ object TradeAnalytics extends QueryModule {
       .select(col("p.id_a").as("doc_a"), col("p.id_b").as("doc_b"))
       .groupBy(col("doc_a"), col("doc_b"))
       .agg(count(lit(1)).as("co"))
-    // symmetrize IN-TASK (r16): the old unionAll read `pairs` twice,
-    // which forced a persist whose cache materialization cost more
-    // than the kernel itself (probe-measured); exploding both
-    // directions of each aggregated pair row keeps the relation
-    // single-pass and fuses straight into the degree joins
-    val sym = pairs.select(explode(array(
-        struct(col("doc_a").as("item"), col("doc_b").as("neighbor"), col("co")),
-        struct(col("doc_b").as("item"), col("doc_a").as("neighbor"), col("co"))))
-        .as("s"))
-      .select(col("s.item").as("item"), col("s.neighbor").as("neighbor"),
-        col("s.co").as("co"))
-      .join(broadcast(itemN.select(col("item"), col("n_cust").as("ni"))),
-        Seq("item"))
-      .join(broadcast(itemN.select(col("item").as("neighbor"),
-        col("n_cust").as("nn"))), Seq("neighbor"))
-      .withColumn("cosine", col("co").cast("double") /
-        sqrt(col("ni").cast("double") * col("nn")))
+    val sym = cosineScored(pairs, itemN, broadcast(_))
     // the anchor relation, rebuilt from the collected values so the
     // final filter and the kernel's anchor set cannot diverge
     import spark.implicits._
     val top50 = spark.createDataset(anchors.toSeq).toDF("item")
-    val w = Window.partitionBy(col("item"))
-      .orderBy(col("cosine").desc, col("neighbor"))
     Materialize.releasing(
-      sym.join(broadcast(top50), Seq("item"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 5)
-        .select(col("item"), col("rank"), col("neighbor"),
-          col("co").cast("bigint").as("n_co_buyers"),
-          round(col("cosine"), 4).as("cosine"))
-        .orderBy(col("item"), col("rank")),
+      top5(sym.join(broadcast(top50), Seq("item")),
+        "cosine", "co", "n_co_buyers"),
       itemN, posts)
   }
 
@@ -1944,16 +2095,10 @@ object TradeAnalytics extends QueryModule {
     */
   val DimsumGamma = 50.0
 
-  /** Broadcast budget for q322's catalog-sized degree dimension
-    * (VERDICT r12 #2, the Dedup.scala minHashLsh discipline): itemN is
-    * one (item, n_cust) row per catalog entry — ~2M rows collects to
-    * ~200 MiB driver-side, the edge of sane. q322's whole point is the
-    * 100 TB regime where the CATALOG co-scales with traffic, so an
-    * explicit hint with no guard eventually dies with driver OOM
-    * instead of degrading; past the budget the degree joins fall back
-    * to shuffle joins (AQE-planned) — slower, never fatal. The count is
-    * a cheap job over the already-persisted aggregate. Measured
-    * fallback cost: SCALE.md round 13. */
+  /** Broadcast budget for the family's catalog-sized degree dimension
+    * ([[catalogHint]]): itemN is one (item, n_cust) row per catalog
+    * entry — ~2M rows collects to ~200 MiB driver-side, the edge of
+    * sane. */
   val DimsumItemBudget = 2000000L
 
   def dimsumNeighbors(spark: SparkSession, dir: String): DataFrame =
@@ -1977,28 +2122,20 @@ object TradeAnalytics extends QueryModule {
     // 50-row LocalRelation: auto-broadcast by size, no explicit hint —
     // the over-budget path's no-catalog-hints contract stays clean
     val top50 = spark.createDataset(k.anchors.get).toDF("item")
-    val w = Window.partitionBy(col("item"))
-      .orderBy(col("est_cosine").desc, col("neighbor"))
     Materialize.releasing(
-      k.sym.join(top50, Seq("item"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 5)
-        .select(col("item"), col("rank"), col("neighbor"),
-          col("emits").cast("bigint").as("n_emits"),
-          round(col("est_cosine"), 4).as("est_cosine"))
-        .orderBy(col("item"), col("rank")),
+      top5(k.sym.join(top50, Seq("item")), "est_cosine", "emits", "n_emits"),
       k.releasables: _*)
   }
 
   /** The shared DIMSUM kernel's products: the symmetric scored
     * relation (item, neighbor, emits, est_cosine), the degree
     * dimension, the kept-basket relation (persisted — q323's verify
-    * phase re-reads it), whether the degree dimension fit the
-    * broadcast budget, and the persisted intermediates the caller
-    * releases through [[Materialize]]. */
+    * phase re-reads it), the degree dimension's broadcast-budget hint,
+    * and the persisted intermediates the caller releases through
+    * [[Materialize]]. */
   private final case class DimsumKernel(sym: DataFrame, itemN: DataFrame,
-      baskets: DataFrame, itemNHinted: Boolean, releasables: Seq[DataFrame],
-      anchors: Option[Seq[Long]] = None)
+      baskets: DataFrame, hint: DataFrame => DataFrame,
+      releasables: Seq[DataFrame], anchors: Option[Seq[Long]] = None)
 
   /** q322 ranks the kernel (top-5 per hub anchor); q323 thresholds
     * and exactly verifies it. `anchorK = Some(k)` restricts the
@@ -2014,61 +2151,21 @@ object TradeAnalytics extends QueryModule {
     val (posts0, b, itemN) = coPurchaseBaskets(spark, dir,
       wide = anchorK.isEmpty)
     val anchors = anchorK.map(k => topAnchors(itemN, k).toSeq)
-    val hinted = itemN.count() <= itemBudget
-    def maybeBroadcast(df: DataFrame): DataFrame =
-      if (hinted) broadcast(df) else df
-    val posts = b.join(maybeBroadcast(itemN), Seq("item"))
-      .select(col("cust"), struct(col("item").as("doc_id"),
-        col("n_cust").cast("int").as("nsh")).as("e"))
-      .groupBy(col("cust")).agg(collect_list(col("e")).as("ds"))
-    // No pre-expansion repartition (measured, the q154 discipline): the
-    // expand+md5 kernel already lands on the 32-wide reduce side of the
-    // posts groupBy — a forced spread read wall-identical (5.05 s both
-    // ways at sf0.1) and only added a shuffle.
-    val expanded = posts.select(col("cust"), explode(anchors match {
+    val (_, hint) = catalogHint(itemN, itemBudget)
+    val expanded = degreePosts(b, itemN, hint)
+      .select(col("cust"), explode(anchors match {
         case Some(a) =>
           graft.functions.PairExpandFunctions.anchorPairExpand(col("ds"), a)
         case None =>
           graft.functions.PairExpandFunctions.pairExpand(col("ds"))
       }).as("p"))
-    val rootProd = sqrt(
-      (col("p.nsh_a").cast("long") * col("p.nsh_b")).cast("double"))
-    val pKeep = least(lit(1.0), lit(gamma) / rootProd)
-    val u = pmod(conv(substring(md5(concat_ws("|",
-        col("cust").cast("string"), col("p.doc_a").cast("string"),
-        col("p.doc_b").cast("string"))), 1, 15), 16, 10).cast("long"),
-      lit(1000000L))
-    // The ||'s left arm (p = 1 ⟺ γ ≥ √(nᵢ·nⱼ)) short-circuits the md5
-    // draw for pairs sampling never touches — at toy degrees that is
-    // most pairs, at production degrees none, and the predicate VALUE
-    // is identical either way. Production swaps the portable md5 (the
-    // DuckDB-replayable oracle contract) for a native 64-bit hash.
-    val emits = expanded
-      .filter(lit(gamma) >= rootProd ||
-        u.cast("double") < pKeep * lit(1e6))
+    val emits = expanded.filter(dimsumKeep(gamma))
       .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
       .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("emits"))
-    def est(ni: Column, nn: Column): Column = {
-      val prod = sqrt((ni * nn).cast("double"))
-      col("emits").cast("double") /
-        (least(lit(1.0), lit(gamma) / prod) * prod)
-    }
-    // in-task symmetrization (r16): one explode emits both directions
-    // of each aggregated pair row, so the kernel output is single-pass
-    // and needs no persist for the old unionAll's two reads
-    val sym = emits.select(explode(array(
-        struct(col("doc_a").as("item"), col("doc_b").as("neighbor"),
-          col("emits")),
-        struct(col("doc_b").as("item"), col("doc_a").as("neighbor"),
-          col("emits")))).as("s"))
-      .select(col("s.item").as("item"), col("s.neighbor").as("neighbor"),
-        col("s.emits").as("emits"))
-      .join(maybeBroadcast(itemN.select(col("item"), col("n_cust").as("ni"))),
-        Seq("item"))
-      .join(maybeBroadcast(itemN.select(col("item").as("neighbor"),
-        col("n_cust").as("nn"))), Seq("neighbor"))
-      .withColumn("est_cosine", est(col("ni"), col("nn")))
-    DimsumKernel(sym, itemN, b, hinted, Seq(posts0, itemN), anchors)
+    val sym = withDegrees(symmetrize(emits, "doc_a", "doc_b", Seq("emits")),
+        itemN, hint)
+      .withColumn("est_cosine", dimsumEstimate(col("emits"), gamma))
+    DimsumKernel(sym, itemN, b, hint, Seq(posts0, itemN), anchors)
   }
 
   /** q323: threshold-mode DIMSUM, TWO-PHASE — all pairs with EXACT
@@ -2127,6 +2224,21 @@ object TradeAnalytics extends QueryModule {
   def dimsumThresholdPairs(spark: SparkSession, dir: String): DataFrame =
     dimsumThresholdPairs(spark, dir, DimsumGamma)
 
+  /** Phase 1 of the two-phase threshold kernel: the canonical
+    * (ca < cb) candidate pairs whose estimate clears ε·bar, persisted
+    * (counted, then read by the prune and the item set), and the
+    * candidate-incident item set. */
+  private def dimsumCandidates(k: DimsumKernel): (DataFrame, DataFrame) = {
+    val cand = k.sym
+      .filter(col("est_cosine") >= lit(DimsumEpsilon * DimsumCandidateBar) &&
+        col("item") < col("neighbor"))
+      .select(col("item").as("ca"), col("neighbor").as("cb"))
+      .persist()
+    val candItems = cand.select(col("ca").as("item"))
+      .unionAll(cand.select(col("cb").as("item"))).distinct()
+    (cand, candItems)
+  }
+
   /** Probe diagnostic (ScaleProbe dimsumdiag): phase-1 candidate-pair
     * count, candidate-incident item count, and verify-subgraph basket
     * rows per tier — the sizes that decide q323's prune-join plan and
@@ -2134,14 +2246,8 @@ object TradeAnalytics extends QueryModule {
   private[graft] def dimsumCandidateDiag(spark: SparkSession,
       dir: String): String = {
     val k = dimsumScored(spark, dir, DimsumItemBudget, DimsumGamma)
-    val cand = k.sym
-      .filter(col("est_cosine") >= lit(DimsumEpsilon * DimsumCandidateBar) &&
-        col("item") < col("neighbor"))
-      .select(col("item").as("ca"), col("neighbor").as("cb"))
-      .persist()
+    val (cand, candItems) = dimsumCandidates(k)
     val nCand = cand.count()
-    val candItems = cand.select(col("ca").as("item"))
-      .unionAll(cand.select(col("cb").as("item"))).distinct()
     val nItems = candItems.count()
     val nVb = k.baskets.join(broadcast(candItems), Seq("item")).count()
     val nB = k.baskets.count()
@@ -2156,20 +2262,11 @@ object TradeAnalytics extends QueryModule {
   private[graft] def dimsumThresholdPairs(spark: SparkSession, dir: String,
       gamma: Double, candBudget: Long = DimsumCandidateBudget): DataFrame = {
     val (verified, k, extras) = dimsumVerified(spark, dir, gamma, candBudget)
-    // in-task symmetrization (r16): the unionAll's second read of
-    // `verified` duplicated the ENTIRE two-phase plan tree through the
-    // union (persist dedups execution, not planning — the analyzed
-    // plan was ~190k explain lines and planning dominated the sf0.01
-    // wall); one explode keeps the tree single-branch
     Materialize.releasing(
-      verified.select(explode(array(
-          struct(col("a").as("item"), col("b").as("neighbor"),
-            col("co"), col("cosine")),
-          struct(col("b").as("item"), col("a").as("neighbor"),
-            col("co"), col("cosine")))).as("s"))
-        .select(col("s.item").as("item"), col("s.neighbor").as("neighbor"),
-          col("s.co").cast("bigint").as("n_co_buyers"),
-          round(col("s.cosine"), 4).as("cosine"))
+      symmetrize(verified, "a", "b", Seq("co", "cosine"))
+        .select(col("item"), col("neighbor"),
+          col("co").cast("bigint").as("n_co_buyers"),
+          round(col("cosine"), 4).as("cosine"))
         .orderBy(col("item"), col("neighbor")),
       k.releasables ++ extras: _*)
   }
@@ -2180,17 +2277,9 @@ object TradeAnalytics extends QueryModule {
   private def dimsumVerified(spark: SparkSession, dir: String,
       gamma: Double, candBudget: Long): (DataFrame, DimsumKernel, Seq[DataFrame]) = {
     val k = dimsumScored(spark, dir, DimsumItemBudget, gamma)
-    val cand = k.sym
-      .filter(col("est_cosine") >= lit(DimsumEpsilon * DimsumCandidateBar) &&
-        col("item") < col("neighbor"))
-      .select(col("item").as("ca"), col("neighbor").as("cb"))
-      .persist()
+    val (cand, candItems) = dimsumCandidates(k)
     val nCand = cand.count()
     val candHinted = nCand <= candBudget
-    def maybeBItemN(df: DataFrame): DataFrame =
-      if (k.itemNHinted) broadcast(df) else df
-    val candItems = cand.select(col("ca").as("item"))
-      .unionAll(cand.select(col("cb").as("item"))).distinct()
     // candidate-incident baskets only: the verify expansion is bounded
     // by the candidate structure, not the catalog
     val vb = k.baskets.join(
@@ -2235,9 +2324,9 @@ object TradeAnalytics extends QueryModule {
     // explode (r16), so the relation is single-pass and the pin was
     // pure cache-materialization overhead on the consumers' only read.
     val verified = exactCo
-      .join(maybeBItemN(k.itemN.select(col("item").as("a"),
+      .join(k.hint(k.itemN.select(col("item").as("a"),
         col("n_cust").as("na"))), Seq("a"))
-      .join(maybeBItemN(k.itemN.select(col("item").as("b"),
+      .join(k.hint(k.itemN.select(col("item").as("b"),
         col("n_cust").as("nb"))), Seq("b"))
       .withColumn("cosine", col("co").cast("double") /
         sqrt((col("na") * col("nb")).cast("double")))
@@ -2365,29 +2454,10 @@ object TradeAnalytics extends QueryModule {
   def dimsumHardNegatives(spark: SparkSession, dir: String): DataFrame = {
     val (verified, k, extras) =
       dimsumVerified(spark, dir, DimsumGamma, DimsumCandidateBudget)
-    // in-task symmetrization (r16) — same single-branch explode as
-    // q323; halves the analyzed plan tree the old unionAll doubled
-    val simpairs = verified.select(explode(array(
-        struct(col("a").as("item"), col("b").as("neighbor"), col("cosine")),
-        struct(col("b").as("item"), col("a").as("neighbor"), col("cosine"))))
-        .as("s"))
-      .select(col("s.item").as("item"), col("s.neighbor").as("neighbor"),
-        col("s.cosine").as("cosine"))
-    val cand = k.baskets.join(simpairs, Seq("item"))
-      .groupBy(col("cust"), col("neighbor"))
-      .agg(max(col("cosine")).as("score"))
-    val hard = cand
-      .join(k.baskets.select(col("cust"), col("item").as("neighbor")),
-        Seq("cust", "neighbor"), "left_anti")
-      .filter(col("score") <= lit(DimsumBandHi))
-    val wUser = Window.partitionBy(col("cust"))
-      .orderBy(col("score").desc, col("neighbor"))
+    val simpairs = symmetrize(verified, "a", "b", Seq("cosine"))
     Materialize.releasing(
-      hard.withColumn("rank", row_number().over(wUser))
-        .filter(col("rank") <= 3)
-        .select(col("cust").as("user_id"), col("rank"),
-          col("neighbor").as("item"), round(col("score"), 4).as("score"))
-        .orderBy(col("user_id"), col("rank")),
+      top3PerUser(unseenNeighbors(k.baskets, simpairs)
+        .filter(col("score") <= lit(DimsumBandHi))),
       k.releasables ++ extras: _*)
   }
 
@@ -2600,76 +2670,41 @@ object TradeAnalytics extends QueryModule {
     val sSet = sampledAnchors.map(_._1).toSeq
     def inSet(c: Column, s: Seq[Long]): Column =
       if (s.isEmpty) lit(false) else c.isin(s: _*)
-    // itemN is CATALOG-sized and the catalog co-scales with traffic at
-    // 100 TB — the same broadcast-budget guard as dimsumScored
-    // (VERDICT r12 #2): past the budget the degree joins degrade to
-    // shuffle joins (AQE-planned), never a driver OOM. Caught by this
-    // round's own 100×-disjoint probe review: the first cut pinned
-    // broadcast(itemN) unconditionally, a ~20M-row collect there.
-    val hinted = itemN.count() <= itemBudget
-    def maybeB(df: DataFrame): DataFrame =
-      if (hinted) broadcast(df) else df
-    val posts = b.join(maybeB(itemN), Seq("item"))
-      .select(col("cust"), struct(col("item").as("doc_id"),
-        col("n_cust").cast("int").as("nsh")).as("e"))
-      .groupBy(col("cust")).agg(collect_list(col("e")).as("ds"))
+    // itemN is CATALOG-sized: the shared broadcast-budget guard (the
+    // 100×-disjoint probe caught a first cut that pinned
+    // broadcast(itemN) unconditionally, a ~20M-row collect there)
+    val (_, hint) = catalogHint(itemN, itemBudget)
     // r16 (guide §1.2 step 1): the route tagging below keeps ONLY
     // anchor-incident pairs, so the expansion emits exactly that
     // subset in-task via the anchor kernel instead of materializing
     // the full Σbsz² expansion and killing most of it in the tag
     // filter. Same pair set, same per-pair md5 draw — identical rows.
-    val expanded = posts.select(col("cust"), explode(
+    val expanded = degreePosts(b, itemN, hint).select(col("cust"), explode(
         graft.functions.PairExpandFunctions.anchorPairExpand(
           col("ds"), top50.map(_._1).toSeq)).as("p"))
-    val rootProd = sqrt(
-      (col("p.nsh_a").cast("long") * col("p.nsh_b")).cast("double"))
-    val pKeep = least(lit(1.0), lit(gamma) / rootProd)
-    val u = pmod(conv(substring(md5(concat_ws("|",
-        col("cust").cast("string"), col("p.doc_a").cast("string"),
-        col("p.doc_b").cast("string"))), 1, 15), 16, 10).cast("long"),
-      lit(1000000L))
     val touchesE = inSet(col("p.doc_a"), eSet) || inSet(col("p.doc_b"), eSet)
     val touchesS = inSet(col("p.doc_a"), sSet) || inSet(col("p.doc_b"), sSet)
-    val drawKeep = lit(gamma) >= rootProd || u.cast("double") < pKeep * lit(1e6)
     // the in-task route fan-out: ≤2 tagged rows per pair, everything
     // else dies before the exchange
     val tagged = expanded.select(col("p.doc_a").as("doc_a"),
         col("p.doc_b").as("doc_b"),
         explode(filter(array(
           when(touchesE, lit("x")),
-          when(touchesS && drawKeep, lit("s"))), c => c.isNotNull)).as("route"))
+          when(touchesS && dimsumKeep(gamma), lit("s"))), c => c.isNotNull))
+          .as("route"))
     val counted = tagged.groupBy(col("route"), col("doc_a"), col("doc_b"))
       .agg(count(lit(1)).as("cnt"))
-    // in-task symmetrization (r16) — same single-pass explode as
-    // q204/q322, so the counted relation needs no persist
-    val sym = counted.select(col("route"), explode(array(
-        struct(col("doc_a").as("item"), col("doc_b").as("neighbor"),
-          col("cnt")),
-        struct(col("doc_b").as("item"), col("doc_a").as("neighbor"),
-          col("cnt")))).as("s"))
-      .select(col("route"), col("s.item").as("item"),
-        col("s.neighbor").as("neighbor"), col("s.cnt").as("cnt"))
-      .join(maybeB(itemN.select(col("item"), col("n_cust").as("ni"))),
-        Seq("item"))
-      .join(maybeB(itemN.select(col("item").as("neighbor"),
-        col("n_cust").as("nn"))), Seq("neighbor"))
+    val sym = withDegrees(
+      symmetrize(counted, "doc_a", "doc_b", Seq("cnt"), keep = Seq("route")),
+      itemN, hint)
     val prod = sqrt((col("ni") * col("nn")).cast("double"))
     val routed = sym.filter(
         (col("route") === "x" && inSet(col("item"), eSet)) ||
         (col("route") === "s" && inSet(col("item"), sSet)))
       .withColumn("score", when(col("route") === "x",
           col("cnt").cast("double") / prod)
-        .otherwise(col("cnt").cast("double") /
-          (least(lit(1.0), lit(gamma) / prod) * prod)))
-    val w = Window.partitionBy(col("item"))
-      .orderBy(col("score").desc, col("neighbor"))
-    Materialize.releasing(
-      routed.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 5)
-        .select(col("item"), col("rank"), col("neighbor"),
-          col("cnt").cast("bigint").as("support"),
-          round(col("score"), 4).as("score"))
-        .orderBy(col("item"), col("rank")),
+        .otherwise(dimsumEstimate(col("cnt"), gamma)))
+    Materialize.releasing(top5(routed, "score", "cnt", "support"),
       posts0, itemN)
   }
 
@@ -2817,63 +2852,16 @@ object TradeAnalytics extends QueryModule {
     // dependent on the item ids, so they join back AFTER the Σbsz²
     // aggregation from the bounded |catalog|-row degree dimension.
     // No anchor restriction here — q217 ranks top-5 neighbors for
-    // EVERY item, so the full pair relation is the computation.
-    // Packed-long pair key + no map-side partial agg (r17, VERDICT r16
-    // #2 / guide §2.3): the Σbsz² aggregation's 12.7M keys are nearly
-    // unique, so the planner's unconditional partial aggregation built
-    // a 12.7M-entry map-side hash table to shrink the shuffle ~3%
-    // (plan: Exchange carried 13.1M of 13.14M emitted rows, 400.6 MiB).
-    // Packing (a << 32) | b collapses the struct key to one long —
-    // grouping is bijective with (a, b) while max id < 2³², guarded at
-    // runtime off the persisted degree dimension (and re-checked
-    // in-kernel: out-of-range ids throw rather than corrupt) — and the
-    // explicit pk repartition makes the aggregation COMPLETE (single
-    // hash table, reduce side only): the exchange now moves bare
-    // 8-byte keys and the partial map build is gone. Past 2³² ids the
-    // struct kernel below is the path — same rows, same oracle.
-    val maxIdRow = itemN.agg(min(col("item")), max(col("item"))).collect()(0)
-    val packedOk = !maxIdRow.isNullAt(1) &&
-      maxIdRow.getLong(0) >= 0L && maxIdRow.getLong(1) < (1L << 32)
-    val pairs = if (packedOk) {
-      posts.select(explode(
-          graft.functions.PairExpandFunctions.pairExpandPackedIds(col("ds")))
-          .as("pk"))
-        .repartition(spark.sparkContext.defaultParallelism, col("pk"))
-        .groupBy(col("pk"))
-        .agg(count(lit(1)).as("co"))
-        .select(shiftrightunsigned(col("pk"), 32).as("doc_a"),
-          col("pk").bitwiseAND(lit(4294967295L)).as("doc_b"), col("co"))
-    } else {
-      posts.select(explode(
-          graft.functions.PairExpandFunctions.pairExpandIds(col("ds"))).as("p"))
-        .select(col("p.id_a").as("doc_a"), col("p.id_b").as("doc_b"))
-        .groupBy(col("doc_a"), col("doc_b"))
-        .agg(count(lit(1)).as("co"))
-    }
+    // EVERY item, so the full pair relation is the computation. Its
+    // 12.7M keys at sf0.1 are nearly unique (a partial agg's Exchange
+    // carried 13.1M of 13.14M emitted rows), hence the spread.
+    val pairs = pairCounts(posts, idRange(itemN, "item"), "doc_a", "doc_b",
+      "co", spread = Some(spark.sparkContext.defaultParallelism))
     // catalog-sized broadcasts under the q322 budget discipline (r16 —
-    // these were unconditional hints before, the exact shape the q326
-    // probe review flagged): past the budget every degree/neighbor
-    // join degrades to an AQE-planned shuffle join, never a driver OOM
-    val nCat = itemN.count()
-    val hinted = nCat <= DimsumItemBudget
-    def maybeB(df: DataFrame): DataFrame = if (hinted) broadcast(df) else df
-    // in-task symmetrization (r16): at sf0.1 the pair relation is
-    // 12.7M nearly-unique rows — persisting it for the unionAll's two
-    // reads cost more than recomputing the kernel (probe-measured);
-    // one explode emits both directions and the relation stays
-    // single-pass
-    val sym = pairs.select(explode(array(
-        struct(col("doc_a").as("item"), col("doc_b").as("neighbor"), col("co")),
-        struct(col("doc_b").as("item"), col("doc_a").as("neighbor"), col("co"))))
-        .as("s"))
-      .select(col("s.item").as("item"), col("s.neighbor").as("neighbor"),
-        col("s.co").as("co"))
-      .join(maybeB(itemN.select(col("item"), col("n_cust").as("ni"))),
-        Seq("item"))
-      .join(maybeB(itemN.select(col("item").as("neighbor"),
-        col("n_cust").as("nn"))), Seq("neighbor"))
-      .withColumn("cosine", col("co").cast("double") /
-        sqrt(col("ni").cast("double") * col("nn")))
+    // unconditional hints here were the shape the q326 100×-disjoint
+    // probe flagged)
+    val (nCat, hint) = catalogHint(itemN, DimsumItemBudget)
+    val sym = cosineScored(pairs, itemN, hint)
     val wItem = Window.partitionBy(col("item"))
       .orderBy(col("cosine").desc, col("neighbor"))
     val nb5 = sym.withColumn("nrk", row_number().over(wItem))
@@ -2885,22 +2873,9 @@ object TradeAnalytics extends QueryModule {
     // and the per-user window then all run exchange-free on hash(cust)
     // — three full shuffles of the basket relation removed (guide
     // §2.4). Past the budget the join shuffles as before.
-    val cand = b.join(
-        if (nCat * 5 <= DimsumItemBudget) broadcast(nb5) else nb5,
-        Seq("item"))
-      .groupBy(col("cust"), col("neighbor"))
-      .agg(max(col("cosine")).as("score"))
-    val hard = cand.join(
-      b.select(col("cust"), col("item").as("neighbor")),
-      Seq("cust", "neighbor"), "left_anti")
-    val wUser = Window.partitionBy(col("cust"))
-      .orderBy(col("score").desc, col("neighbor"))
     Materialize.releasing(
-      hard.withColumn("rank", row_number().over(wUser))
-        .filter(col("rank") <= 3)
-        .select(col("cust").as("user_id"), col("rank"),
-          col("neighbor").as("item"), round(col("score"), 4).as("score"))
-        .orderBy(col("user_id"), col("rank")),
+      top3PerUser(unseenNeighbors(b,
+        if (nCat * 5 <= DimsumItemBudget) broadcast(nb5) else nb5)),
       posts, itemN)
   }
 
@@ -4683,6 +4658,13 @@ object TradeAnalytics extends QueryModule {
     */
   val RecsysNeighborK = 20
 
+  /** q302's broadcast guard for the per-item neighbor arrays: ≤ K rows
+    * per catalog item, with the max item id bounding the catalog. A
+    * division, not `maxItem * K`, which wraps negative (and so passes)
+    * once maxItem > Long.MaxValue / K. */
+  private[graft] def neighborListsFit(maxItem: Long): Boolean =
+    maxItem >= 0 && maxItem <= DimsumItemBudget / RecsysNeighborK
+
   def recsysBacktest(spark: SparkSession, dir: String): DataFrame = {
     val orders = Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"))
@@ -4717,12 +4699,12 @@ object TradeAnalytics extends QueryModule {
     val heldOut = tagged.filter(col("rn") === 1)
       .join(li, col("o_orderkey") === col("l_orderkey"))
       .select(col("o_custkey").as("c"), col("l_partkey").as("item")).distinct()
-    // catalog bound for the broadcast guard AND the packed-pair guard
-    // below: item ids upper-bound the distinct-item count (the
-    // conservative, collect-free direction); trainItems is persisted,
-    // so the max is a cached column pass
-    val maxItemRow = trainItems.agg(max(col("item"))).collect()(0)
-    val maxItem = if (maxItemRow.isNullAt(0)) -1L else maxItemRow.getLong(0)
+    // id range for the packed-pair guard AND catalog bound for the
+    // broadcast guard below: item ids upper-bound the distinct-item
+    // count (the conservative, collect-free direction); trainItems is
+    // persisted, so the range is a cached column pass
+    val itemRange = idRange(trainItems, "item")
+    val maxItem = itemRange.fold(-1L)(_._2)
     // Half-pair co-occurrence (r17, guide §2.3 — shuffle fewer bytes):
     // the old self-join emitted BOTH directions (item ≠ item), then
     // aggregated 2× the distinct pair mass; w(i,j) = w(j,i) by
@@ -4732,32 +4714,16 @@ object TradeAnalytics extends QueryModule {
     // symmetrization, oracle-identical) before the top-K window.
     // r17 second pass: the within-order pair set doesn't need a join
     // at all — trainItems is already hash(ok) partitioned, so
-    // groupBy(ok).collect_list runs IN PLACE and the packed pair
-    // kernel (q217's single-long (i<j) key, runtime-guarded on
-    // max id < 2³² with the join formulation as the fallback) emits
+    // groupBy(ok).collect_list runs IN PLACE and the shared pair-count
+    // stage (q217's packed (i<j) key under its id-range guard) emits
     // each order's pairs in-task: the self-join's build+probe over the
     // whole train relation and the two-long agg key both disappear;
     // the only exchange left on this path is the pair aggregation's
     // own (now on a single long). Same pair multiset, same counts.
-    val coocHalf =
-      if (maxItem < (1L << 32)) {
-        trainItems
-          .groupBy(col("ok")).agg(collect_list(col("item")).as("ds"))
-          .select(explode(graft.functions.PairExpandFunctions
-            .pairExpandPackedIds(col("ds"))).as("pk"))
-          .groupBy(col("pk")).agg(count(lit(1)).as("w"))
-          .select(shiftrightunsigned(col("pk"), 32).as("ia"),
-            col("pk").bitwiseAND(lit(0xFFFFFFFFL)).as("ib"), col("w"))
-      } else {
-        trainItems.alias("x").join(trainItems.alias("y"),
-            col("x.ok") === col("y.ok") && col("x.item") < col("y.item"))
-          .groupBy(col("x.item").as("ia"), col("y.item").as("ib"))
-          .agg(count(lit(1)).as("w"))
-      }
-    val coocFull = coocHalf.select(explode(array(
-        struct(col("ia").as("i"), col("ib").as("j"), col("w")),
-        struct(col("ib").as("i"), col("ia").as("j"), col("w")))).as("s"))
-      .select(col("s.i").as("i"), col("s.j").as("j"), col("s.w").as("w"))
+    val coocHalf = pairCounts(
+      trainItems.groupBy(col("ok")).agg(collect_list(col("item")).as("ds")),
+      itemRange, "ia", "ib", "w")
+    val coocFull = symmetrize(coocHalf, "ia", "ib", Seq("w"), as = ("i", "j"))
     val wNbr = Window.partitionBy(col("i"))
       .orderBy(col("w").desc, col("j"))
     val cooc = coocFull.withColumn("nrk", row_number().over(wNbr))
@@ -4790,7 +4756,7 @@ object TradeAnalytics extends QueryModule {
     // shuffle join (never a driver OOM) — the r16 shape, same rows.
     val coocArr = cooc.groupBy(col("i"))
       .agg(collect_list(struct(col("j"), col("w"))).as("nbrs"))
-    val coocFits = maxItem >= 0 && maxItem * RecsysNeighborK <= DimsumItemBudget
+    val coocFits = neighborListsFit(maxItem)
     val profileP = trainItems.select(col("c"), col("item"))
       .repartition(w, col("c"))
       .distinct() // in place: hash(c) satisfies the (c, item) clustering

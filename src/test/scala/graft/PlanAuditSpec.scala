@@ -588,6 +588,23 @@ class PlanAuditSpec extends SparkSpec {
         s"symmetrization, posting-list explodes): got $generates:\n$plan")
   }
 
+  test("q217/q302 packed pair kernel: ONE evaluated expansion each") {
+    // the Σbsz² (q217) and within-order (q302) pair expansions are the
+    // two queries' hot stages; a refactor that evaluates either twice
+    // (a second reader of the un-persisted pair relation) doubles it.
+    // Counted on the executed physical plan, as in the q326 pin above.
+    for ((name, df) <- Seq(
+        "q217" -> operators.TradeAnalytics.hardNegatives(spark, sfDir),
+        "q302" -> operators.TradeAnalytics.recsysBacktest(spark, sfDir))) {
+      assert(df.collect().nonEmpty, name)
+      val gens = kernelGenerateCount(
+        df.queryExecution.executedPlan, "pair_expand_packed_ids")
+      assert(gens === 1,
+        s"$name: exactly ONE Generate node may evaluate the packed pair " +
+          s"kernel, got $gens:\n${explainText(df)}")
+    }
+  }
+
   test("Markov-family metadata DPs stay driver-side (bounded job count)") {
     // r10: these four reduce the fact table to a ≤(|types|+1)·|types|
     // count matrix and run their sweeps as exact driver DPs (SURVEY S9).

@@ -1350,6 +1350,55 @@ class TradeAnalyticsSpec extends SparkSpec {
     }
   }
 
+  test("shared pair-count stage: out-of-range ids take the struct fallback") {
+    import TestSpark.spark.implicits._
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Long)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+        .toSeq.sorted
+    def packed(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.queryExecution.optimizedPlan.toString
+        .contains("pair_expand_packed_ids")
+    val big = (1L << 32) + 7L
+    // a negative id AND an id >= 2^32: the packed kernel would throw
+    val wide = Seq(Seq(-5L, 3L, big), Seq(3L, big), Seq(-5L, 3L)).toDF("ds")
+    val wideOut = TradeAnalytics.pairCounts(wide, Some((-5L, big)), "a", "b", "co")
+    assert(!packed(wideOut))
+    assert(rows(wideOut) === Seq((-5L, 3L, 2L), (-5L, big, 1L), (3L, big, 2L)))
+    // a negative id under an in-range max falls back too (the top-end-only
+    // guard sent it to the packed kernel)
+    val neg = Seq(Seq(-5L, 3L), Seq(-5L, 3L, 9L)).toDF("ds")
+    val negOut = TradeAnalytics.pairCounts(neg, Some((-5L, 9L)), "a", "b", "co")
+    assert(!packed(negOut))
+    assert(rows(negOut) === Seq((-5L, 3L, 2L), (-5L, 9L, 1L), (3L, 9L, 1L)))
+    // in range (top slot included, where the packed key goes negative):
+    // packed, packed-and-spread, and struct paths give one multiset
+    val top = (1L << 32) - 1L
+    val ok = Seq(Seq(1L, 2L, 3L), Seq(2L, 3L), Seq(3L, 1L, top),
+      Seq(top - 1L, top), Seq(top, top - 1L, 0L)).toDF("ds")
+    val viaPacked = TradeAnalytics.pairCounts(ok, Some((0L, top)), "a", "b", "co")
+    val viaSpread = TradeAnalytics.pairCounts(ok, Some((0L, top)), "a", "b", "co",
+      spread = Some(3))
+    val viaStruct = TradeAnalytics.pairCounts(ok, None, "a", "b", "co")
+    assert(packed(viaPacked) && packed(viaSpread) && !packed(viaStruct))
+    assert(rows(viaStruct).map(_._3).sum === 11L)
+    assert(rows(viaPacked) === rows(viaStruct))
+    assert(rows(viaSpread) === rows(viaStruct))
+  }
+
+  test("q302 neighbor-array broadcast guard: exact boundary, no overflow") {
+    val k = TradeAnalytics.RecsysNeighborK
+    val edge = TradeAnalytics.DimsumItemBudget / k
+    assert(TradeAnalytics.neighborListsFit(0L))
+    assert(TradeAnalytics.neighborListsFit(edge))
+    assert(!TradeAnalytics.neighborListsFit(edge + 1))
+    assert(!TradeAnalytics.neighborListsFit(-1L)) // empty train relation
+    // the product form maxItem * K wraps negative here, and so passed
+    val huge = Long.MaxValue / k + 1
+    assert(huge * k < 0L)
+    assert(!TradeAnalytics.neighborListsFit(huge))
+    assert(!TradeAnalytics.neighborListsFit(Long.MaxValue))
+  }
+
   test("q224: Theil terms match a driver-side replay and the decomposition closes") {
     val natByCust = Tables.customer(spark, sfDir)
       .join(Tables.nation(spark, sfDir),
