@@ -8,9 +8,11 @@ import org.apache.spark.sql.functions._
   * print that never fails (SURVEY §0.1.7), plus the key-uniqueness check
   * the star schema actually needs.
   *
-  * Both checks are single aggregation jobs: uniqueness compares
-  * `count(*)` with `count_distinct(key)` in ONE pass instead of a
-  * groupBy+filter (no second job, no wide shuffle of non-key columns).
+  * Both checks come from ONE aggregation job per table: row count,
+  * rows whose key columns are all non-null, and distinct keys, compared
+  * in one pass instead of a groupBy+filter (no second job, no wide
+  * shuffle of non-key columns). `non_empty` is that pass's `n > 0`, so
+  * [[checkAll]] runs five jobs for its ten results.
   */
 object QualityChecks {
 
@@ -22,30 +24,34 @@ object QualityChecks {
     QcResult(table, "non_empty", n, n > 0)
   }
 
-  /** Surrogate/natural key uniqueness (not nullable, no duplicates). */
+  /** Surrogate/natural key uniqueness (not nullable, no duplicates), from
+    * one job: rows, rows with every key column non-null, distinct keys.
+    * `count_distinct` over several columns skips a row if any key column
+    * is null, as the non-null count does; a `struct` key would count such
+    * a row on both sides, since a struct is never null. */
   def keyUnique(df: DataFrame, table: String, keyCols: Seq[String]): QcResult = {
-    val key = if (keyCols.size == 1) col(keyCols.head) else struct(keyCols.map(col): _*)
+    val keys = keyCols.map(col)
     val row = df.agg(
       count(lit(1)).as("n"),
-      count(key).as("n_nonnull"),
-      count_distinct(key).as("n_distinct")).head()
+      count(when(keys.map(_.isNotNull).reduce(_ && _), lit(1))).as("n_nonnull"),
+      count_distinct(keys.head, keys.tail: _*).as("n_distinct")).head()
     val (n, nonNull, distinct) = (row.getLong(0), row.getLong(1), row.getLong(2))
     QcResult(table, s"key_unique(${keyCols.mkString(",")})", n,
       n > 0 && n == nonNull && nonNull == distinct)
   }
 
-  /** Run the reference's QC battery over the five star-schema outputs. */
+  /** Run the reference's QC battery over the five star-schema outputs:
+    * `non_empty` then `key_unique` per table; `non_empty` reads the
+    * row count of the `key_unique` aggregation. */
   def checkAll(fact: DataFrame, visa: DataFrame, calendar: DataFrame,
       country: DataFrame, demographics: DataFrame): Seq[QcResult] = Seq(
-    nonEmpty(fact, "immigration_fact"),
-    keyUnique(fact, "immigration_fact", Seq("record_id")),
-    nonEmpty(visa, "visa_type_dim"),
-    keyUnique(visa, "visa_type_dim", Seq("visa_type_key")),
-    nonEmpty(calendar, "immigration_calendar_dim"),
-    keyUnique(calendar, "immigration_calendar_dim", Seq("id")),
-    nonEmpty(country, "country_dim"),
-    keyUnique(country, "country_dim", Seq("country_code")),
-    nonEmpty(demographics, "usa_demographics_dim"),
-    keyUnique(demographics, "usa_demographics_dim", Seq("id")),
-  )
+    (fact, "immigration_fact", "record_id"),
+    (visa, "visa_type_dim", "visa_type_key"),
+    (calendar, "immigration_calendar_dim", "id"),
+    (country, "country_dim", "country_code"),
+    (demographics, "usa_demographics_dim", "id"),
+  ).flatMap { case (df, table, key) =>
+    val u = keyUnique(df, table, Seq(key))
+    Seq(QcResult(table, "non_empty", u.count, u.count > 0), u)
+  }
 }

@@ -4,6 +4,7 @@ import java.time.LocalDate
 
 import graft.pipeline._
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 class CapstonePipelineSpec extends SparkSpec {
 
@@ -11,6 +12,29 @@ class CapstonePipelineSpec extends SparkSpec {
   private lazy val temp = CapstoneFixtures.temperature(spark)
   private lazy val demo = CapstoneFixtures.demographics(spark)
   private lazy val codes = CapstoneFixtures.countryCodes(spark)
+
+  private def tempDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Writes the raw fixtures as the CSVs etl.py expects (S2-S4 readers). */
+  private def writeInputs(in: String): Unit = {
+    imm.coalesce(1).write.option("header", "true").csv(s"$in/immigration.csv")
+    temp.coalesce(1).write.option("header", "true").csv(s"$in/temperatures.csv")
+    demo.coalesce(1).write.option("header", "true").option("sep", ";").csv(s"$in/demographics.csv")
+    codes.coalesce(1).write.option("header", "true").csv(s"$in/i94res.csv")
+  }
+
+  private def buildFromCsv(in: String): CapstoneEtl.StarSchemaTables =
+    CapstoneEtl.buildStarSchema(
+      CapstoneEtl.readImmigration(spark, s"$in/immigration.csv"),
+      CapstoneEtl.readTemperature(spark, s"$in/temperatures.csv"),
+      CapstoneEtl.readDemographics(spark, s"$in/demographics.csv"),
+      CapstoneEtl.readCountryCodes(spark, s"$in/i94res.csv"))
+
+  private def checkAll(t: CapstoneEtl.StarSchemaTables): Seq[QualityChecks.QcResult] =
+    QualityChecks.checkAll(t.fact, t.visa, t.calendar, t.country, t.demographics)
+
+  private def cacheIsEmpty: Boolean = spark.sharedState.cacheManager.isEmpty
 
   test("cleanImmigration drops sparse columns and all-null rows") {
     val cleaned = Clean.cleanImmigration(imm)
@@ -126,6 +150,8 @@ class CapstonePipelineSpec extends SparkSpec {
     val d = CapstoneEtl.buildStarSchema(imm, temp, demo, codes)
     assert(d.fact.filter(col("arrdate") === "1960-01-01").count() === 1)
     assert(d.country.filter(col("average_temperature").isNotNull).count() > 0)
+    t.release()
+    d.release()
   }
 
   test("withObjectStore seam carries the s3a client + committer configuration") {
@@ -141,12 +167,107 @@ class CapstonePipelineSpec extends SparkSpec {
 
   test("quality checks: star schema passes; duplicate keys fail") {
     val t = CapstoneEtl.buildStarSchema(imm, temp, demo, codes)
-    val results = QualityChecks.checkAll(t.fact, t.visa, t.calendar, t.country, t.demographics)
+    val results = checkAll(t)
     assert(results.forall(_.passed), results.filterNot(_.passed).mkString(", "))
     // negative case: a frame with a duplicated key must fail
     val dup = t.visa.union(t.visa)
     assert(!QualityChecks.keyUnique(dup, "dup", Seq("visa_type_key")).passed)
     assert(!QualityChecks.nonEmpty(t.visa.limit(0), "empty").passed)
+    t.release()
+  }
+
+  test("checkAll: one aggregation per table gives the separate checks' ten results") {
+    val t = CapstoneEtl.buildStarSchema(imm, temp, demo, codes)
+    val separate = Seq(
+      (t.fact, "immigration_fact", "record_id"),
+      (t.visa, "visa_type_dim", "visa_type_key"),
+      (t.calendar, "immigration_calendar_dim", "id"),
+      (t.country, "country_dim", "country_code"),
+      (t.demographics, "usa_demographics_dim", "id"),
+    ).flatMap { case (df, table, key) =>
+      Seq(QualityChecks.nonEmpty(df, table), QualityChecks.keyUnique(df, table, Seq(key)))
+    }
+    assert(checkAll(t) === separate)
+    assert(separate.map(r => r.table -> r.count).distinct === Seq(
+      "immigration_fact" -> 5L, "visa_type_dim" -> 4L, "immigration_calendar_dim" -> 3L,
+      "country_dim" -> 3L, "usa_demographics_dim" -> 2L))
+    t.release()
+  }
+
+  test("checkAll: a duplicated key in one dimension fails only that table's key_unique") {
+    val t = CapstoneEtl.buildStarSchema(imm, temp, demo, codes)
+    val results = QualityChecks.checkAll(t.fact, t.visa, t.calendar,
+      t.country.union(t.country.limit(1)), t.demographics)
+    assert(results.filterNot(_.passed).map(r => r.table -> r.check) ===
+      Seq("country_dim" -> "key_unique(country_code)"))
+    assert(results.find(_.table == "country_dim").map(_.count) === Some(4L))
+    t.release()
+  }
+
+  test("keyUnique: a two-column key with a null component fails") {
+    import TestSpark.spark.implicits._
+    val df = Seq[(Option[Long], Option[String])](
+      (Some(1L), Some("a")), (Some(1L), Some("b")), (Some(2L), None)).toDF("k1", "k2")
+    val r = QualityChecks.keyUnique(df, "pairs", Seq("k1", "k2"))
+    assert(r.check === "key_unique(k1,k2)" && r.count === 3L)
+    assert(!r.passed)
+    // the same keys without the null component pass
+    assert(QualityChecks.keyUnique(df.where(col("k2").isNotNull), "pairs", Seq("k1", "k2")).passed)
+    // and a duplicated composite key still fails
+    assert(!QualityChecks.keyUnique(df.union(df).where(col("k2").isNotNull),
+      "pairs", Seq("k1", "k2")).passed)
+  }
+
+  test("QC after the write re-reads no input: checkAll passes with the inputs deleted") {
+    val expected = {
+      val t = CapstoneEtl.buildStarSchema(imm, temp, demo, codes)
+      try checkAll(t) finally t.release()
+    }
+    val dir = tempDir("capstone_qc_cached")
+    writeInputs(s"$dir/in")
+    val t = buildFromCsv(s"$dir/in")
+    try {
+      CapstoneEtl.writeStarSchema(t, s"$dir/out")
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$dir/in"))
+      assert(!new java.io.File(s"$dir/in").exists())
+      val results = checkAll(t)
+      assert(results.forall(_.passed), results.filterNot(_.passed).mkString(", "))
+      assert(results === expected)
+    } finally t.release()
+  }
+
+  test("writeStarSchema keeps a build-cached calendar and leaves no cache of its own") {
+    spark.catalog.clearCache() // start from a known-empty cache manager
+    val dir = tempDir("capstone_cal_cache")
+    val t = CapstoneEtl.buildStarSchema(imm, temp, demo, codes)
+    CapstoneEtl.writeStarSchema(t, s"$dir/cached")
+    assert(t.calendar.storageLevel === StorageLevel.MEMORY_AND_DISK)
+    t.release()
+    assert(cacheIsEmpty)
+
+    val cleaned = Clean.cleanImmigration(imm)
+    val visa = StarSchema.visaTypeDim(cleaned)
+    val bare = CapstoneEtl.StarSchemaTables(
+      fact = StarSchema.immigrationFact(cleaned, visa), visa = visa,
+      calendar = StarSchema.calendarDim(cleaned),
+      country = StarSchema.countryDim(cleaned, codes, Clean.cleanTemperature(temp)),
+      demographics = StarSchema.demographicsDim(Clean.cleanDemographics(demo)),
+      immigration = cleaned)
+    CapstoneEtl.writeStarSchema(bare, s"$dir/bare")
+    assert(cacheIsEmpty)
+    assert(spark.read.parquet(s"$dir/bare/immigration_calendar_dim").count() === 3)
+  }
+
+  test("release() unpersists the immigration and dimension caches") {
+    spark.catalog.clearCache() // start from a known-empty cache manager
+    val t = CapstoneEtl.buildStarSchema(imm, temp, demo, codes)
+    CapstoneEtl.writeStarSchema(t, tempDir("capstone_release"))
+    assert(checkAll(t).forall(_.passed))
+    val cached = Seq(t.immigration, t.visa, t.calendar, t.country, t.demographics)
+    assert(cached.forall(_.storageLevel != StorageLevel.NONE))
+    assert(t.fact.storageLevel === StorageLevel.NONE)
+    t.release()
+    assert(cacheIsEmpty)
   }
 
   test("mergeMonthlyFact overwrites only the touched month partitions") {
@@ -211,19 +332,11 @@ class CapstonePipelineSpec extends SparkSpec {
   }
 
   test("end-to-end: CSV in, partitioned star-schema parquet out") {
-    val dir = java.nio.file.Files.createTempDirectory("capstone_e2e").toString
-    // write raw fixtures as the CSVs etl.py expects (S2-S4 readers)
-    imm.coalesce(1).write.option("header", "true").csv(s"$dir/in/immigration.csv")
-    temp.coalesce(1).write.option("header", "true").csv(s"$dir/in/temperatures.csv")
-    demo.coalesce(1).write.option("header", "true").option("sep", ";").csv(s"$dir/in/demographics.csv")
-    codes.coalesce(1).write.option("header", "true").csv(s"$dir/in/i94res.csv")
-
-    val t = CapstoneEtl.buildStarSchema(
-      CapstoneEtl.readImmigration(spark, s"$dir/in/immigration.csv"),
-      CapstoneEtl.readTemperature(spark, s"$dir/in/temperatures.csv"),
-      CapstoneEtl.readDemographics(spark, s"$dir/in/demographics.csv"),
-      CapstoneEtl.readCountryCodes(spark, s"$dir/in/i94res.csv"))
+    val dir = tempDir("capstone_e2e")
+    writeInputs(s"$dir/in")
+    val t = buildFromCsv(s"$dir/in")
     CapstoneEtl.writeStarSchema(t, s"$dir/out")
+    t.release()
 
     val fact = spark.read.parquet(s"$dir/out/immigration_fact")
     assert(fact.count() === 5)
