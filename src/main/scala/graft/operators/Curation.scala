@@ -1246,18 +1246,34 @@ object Curation extends QueryModule {
       .filter(col("doc_id") < col("dst"))
       .select(col("doc_id").as("src"), col("dst")).distinct()
       .persist()
+    val rows = kcorePeel(edges0, ks, rounds)
+    edges0.unpersist()
+    import spark.implicits._
+    rows.toDF("k", "n_nodes", "n_edges", "converged").orderBy(col("k"))
+  }
+
+  /** q255's peel loop: `rounds` synchronous peel rounds of the
+    * `(src, dst)` edge set for every k in `ks`, returning per k
+    * `(k, n_nodes, n_edges, converged)`. `converged` compares the edge
+    * count at the start of the last round with the count after it
+    * (with one round, the start is the input edge set).
+    */
+  private[graft] def kcorePeel(edges: DataFrame, ks: Seq[Int],
+      rounds: Int): Seq[(Int, Long, Long, Boolean)] = {
+    require(rounds >= 1, s"k-core needs at least one peel round, got $rounds")
     // r17 (guide §1.4 — fewer actions): the per-k peels are
     // INDEPENDENT, so one k-tagged loop replaces the 2 sequential
     // 4-round loops — each round peels BOTH ks in the same jobs (the
     // degree agg keys on (k, v), the survive-joins on (k, endpoint)),
     // halving the round count and with it the AQE stage-job floor that
     // dominated this query's wall (bench 2.89 s against 1.25 s of task
-    // time). Counts run only after the final two rounds — the only two
-    // the convergence flag reads (edge sets shrink monotonically, so
-    // equal successive COUNTS still imply equal SETS per k). Per-k
-    // results are bit-identical to the sequential loops: same rounds,
-    // same per-k edge sets, same counts.
-    var live = edges0.select(
+    // time). Counts run only at the start and the end of the last
+    // round — the two the convergence flag reads (edge sets shrink
+    // monotonically, so equal successive COUNTS still imply equal SETS
+    // per k); the start count reads the previous round's materialized
+    // cut. Per-k results are bit-identical to the sequential loops:
+    // same rounds, same per-k edge sets, same counts.
+    var live = edges.select(
       explode(array(ks.map(lit(_)): _*)).as("k"), col("src"), col("dst"))
     var liveCut: Option[Checkpoints.Cut] = None
     var prevCnt = Map.empty[Int, Long]
@@ -1266,6 +1282,7 @@ object Curation extends QueryModule {
       df.groupBy(col("k")).agg(count(lit(1)).as("n")).collect()
         .map(r => r.getInt(0) -> r.getLong(1)).toMap.withDefaultValue(0L)
     for (r <- 1 to rounds) {
+      if (r == rounds) prevCnt = countByK(live)
       val deg = live.select(col("k"), col("src").as("v"))
         .unionAll(live.select(col("k"), col("dst").as("v")))
         .groupBy(col("k"), col("v")).agg(count(lit(1)).as("deg"))
@@ -1274,7 +1291,6 @@ object Curation extends QueryModule {
         .join(keep.withColumnRenamed("v", "src"), Seq("k", "src"))
         .join(keep.withColumnRenamed("v", "dst"), Seq("k", "dst"))
         .select(col("k"), col("src"), col("dst")))
-      if (r == rounds - 1) prevCnt = countByK(nextCut.df)
       if (r == rounds) lastCnt = countByK(nextCut.df)
       // the cut's eager materialization consumed the prior round's
       // blocks — release them now instead of stacking 4 rounds of
@@ -1288,10 +1304,7 @@ object Curation extends QueryModule {
       .groupBy(col("k")).agg(count_distinct(col("v")).as("n")).collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap.withDefaultValue(0L)
     liveCut.foreach(_.release()) // nNodes was the loop's last read
-    edges0.unpersist()
-    val rows = ks.map(k => (k, nNodes(k), lastCnt(k), prevCnt(k) == lastCnt(k)))
-    import spark.implicits._
-    rows.toDF("k", "n_nodes", "n_edges", "converged").orderBy(col("k"))
+    ks.map(k => (k, nNodes(k), lastCnt(k), prevCnt(k) == lastCnt(k)))
   }
 
   /** One peel round of the oracle chain: degree table over the previous

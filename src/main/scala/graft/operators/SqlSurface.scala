@@ -252,7 +252,7 @@ object SqlSurface extends QueryModule {
     * over an aggregate-sized series). The DuckDB oracle still runs
     * the recursive-CTE formulation — two genuinely independent
     * evaluation strategies, bit-equal because the DP is exact-integer.
-    * q226 keeps the NATIVE Spark recursive-CTE execution demo (with
+    * q235 keeps the NATIVE Spark recursive-CTE execution demo (with
     * its input pre-materialized so iterations stop re-scanning the
     * fact table).
     */
@@ -370,23 +370,8 @@ object SqlSurface extends QueryModule {
       |GROUP BY s.burst, r.n_runs, r.longest_run
       |ORDER BY s.burst""".stripMargin
 
-  /** q226: WITH RECURSIVE executed by Spark itself (4.x recursive-CTE
-    * support) — a damped revenue-momentum index chained month over
-    * month: idx_m = idx_{m-1} · (1 + ½·(rev_m/rev_{m-1} − 1)). The
-    * recurrence is deliberately NON-telescoping (the ½ damping makes
-    * the product path-dependent), so no window/ln-exp rewrite computes
-    * it — this is the shape that genuinely needs iteration-until-done,
-    * and both engines chain the identical double sequence so parity is
-    * bit-exact. The SQL text is ANSI-portable and is its own DuckDB
-    * oracle (the module's q48 discipline).
-    *
-    * Scale shape: recursion runs over the ~84-row MONTH relation (one
-    * aggregation shuffle reduces the fact table first); each step is a
-    * 1-row join — the driver never loops, Spark's UnionLoop executes
-    * the fixpoint.
-    */
-  /** Pre-materialized month spine shared by the native recursive-CTE
-    * queries (q226/q235): Spark's UnionLoop RE-EVALUATES the step
+  /** Pre-materialized month spine of the native recursive-CTE query
+    * (q235): Spark's UnionLoop RE-EVALUATES the step
     * query's inputs on every iteration, so leaving the fact-table
     * aggregation inside the CTE cost |months| × (orders scan + agg +
     * window) — 728 jobs / ~30 s at sf0.1 (measured, r10) for an
@@ -408,8 +393,8 @@ object SqlSurface extends QueryModule {
     spine
   }
 
-  /** Months-per-UnionLoop-iteration for the block-unrolled recursions
-    * (q226/q235). The native recursive CTE costs ~4 scheduler jobs PER
+  /** Months-per-UnionLoop-iteration for the block-unrolled recursion
+    * (q235). The native recursive CTE costs ~4 scheduler jobs PER
     * ITERATION on this runtime regardless of row counts — an ~84-month
     * chain paid ~9-10 s of pure scheduling at any sf (the two slowest
     * queries of the whole surface, 7% of the r11 dump wall in two
@@ -465,6 +450,18 @@ object SqlSurface extends QueryModule {
     try body finally spark.conf.set(key, prev)
   }
 
+  /** q226: a damped revenue-momentum index chained month over month:
+    * idx_m = idx_{m-1} · (1 + ½·(rev_m/rev_{m-1} − 1)). The recurrence
+    * is deliberately NON-telescoping (the ½ damping makes the product
+    * path-dependent), so no window/ln-exp rewrite computes it. Its SQL
+    * text is a WITH RECURSIVE chain, ANSI-portable and its own DuckDB
+    * oracle (the module's q48 discipline).
+    *
+    * Spark does not execute that recursion: one aggregation reduces
+    * the fact table to the ~84-row month relation and the chain
+    * advances on the driver ([[momentumChain]]), so only q235 still
+    * drives Spark's UnionLoop.
+    */
   def recursiveCte(spark: SparkSession, dir: String): DataFrame = {
     // r17 (guide §1.4; VERDICT r16 #8; the r10 bounded-metadata
     // discipline): the recursion's whole state is the MONTH spine —
@@ -488,23 +485,27 @@ object SqlSurface extends QueryModule {
       """SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS m,
         |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
         |    AS rev
-        |FROM orders GROUP BY 1 ORDER BY m""".stripMargin).collect()
-    val chain = scala.collection.mutable.ArrayBuffer
-      .empty[(java.sql.Date, Long, Double)]
-    var idx = 100.0
-    var prevRev = 0L
-    monthly.zipWithIndex.foreach { case (r, i) =>
-      val m = r.getDate(0); val rev = r.getLong(1)
-      if (i > 0) idx = idx * (1.0 + 0.5 * (rev.toDouble / prevRev.toDouble - 1.0))
-      prevRev = rev
-      chain += ((m, rev, idx))
-    }
+        |FROM orders GROUP BY 1 ORDER BY m""".stripMargin).collect().toSeq
+    val chain = monthly.zip(momentumChain(monthly.map(_.getLong(1))))
+      .map { case (r, idx) => (r.getDate(0), r.getLong(1), idx) }
     import spark.implicits._
-    chain.toSeq.toDF("month", "rev_cents", "idx")
+    chain.toDF("month", "rev_cents", "idx")
       .select(col("month"), col("rev_cents"),
         round(col("idx"), 6).as("momentum_idx"))
       .orderBy(col("month"))
   }
+
+  /** q226's momentum index over month-ordered revenues, seeded at 100.
+    * A month whose predecessor's revenue is 0 has no ratio, so its
+    * index is NULL, and so is every later month's: the oracle's
+    * `CAST(n.rev AS DOUBLE) / c.rev` is NULL there and the NULL carries
+    * down the chain (a JVM division would give Infinity or NaN). */
+  private[graft] def momentumChain(revs: Seq[Long]): Seq[Option[Double]] =
+    if (revs.isEmpty) Seq.empty
+    else revs.zip(revs.tail).scanLeft(Option(100.0)) { case (idx, (prev, rev)) =>
+      idx.filter(_ => prev != 0L)
+        .map(i => i * (1.0 + 0.5 * (rev.toDouble / prev.toDouble - 1.0)))
+    }
 
   private val recursiveCteSql =
     """WITH RECURSIVE monthly AS (

@@ -44,6 +44,19 @@ object Clean {
       keys = Seq("dt", "City", "Country"),
       tiebreak = Seq("AverageTemperature", "AverageTemperatureUncertainty", "Latitude", "Longitude"))
 
+  /** [[cleanTemperature]]'s `(dt, City, Country, AverageTemperature)`
+    * columns by aggregation: one row per key with its smallest non-null
+    * `AverageTemperature`. Those are exactly the rows and values
+    * `cleanTemperature` keeps, because its tiebreak orders by
+    * `AverageTemperature` first — so a consumer that needs no other
+    * column gets them from a hash aggregation instead of the dedup's
+    * `row_number` window and its sort.
+    */
+  def temperatureKeyMinima(df: DataFrame): DataFrame =
+    df.na.drop(Seq("AverageTemperature"))
+      .groupBy(col("dt"), col("City"), col("Country"))
+      .agg(min(col("AverageTemperature")).as("AverageTemperature"))
+
   private val demographicsRequired =
     Seq("Male Population", "Female Population", "Number of Veterans",
       "Foreign-born", "Average Household Size")

@@ -12,7 +12,8 @@ import org.apache.spark.sql.functions._
   * rows whose key columns are all non-null, and distinct keys, compared
   * in one pass instead of a groupBy+filter (no second job, no wide
   * shuffle of non-key columns). `non_empty` is that pass's `n > 0`, so
-  * [[checkAll]] runs five jobs for its ten results.
+  * [[checkAll]] runs five jobs for its ten results, submitted together
+  * so that they overlap (the reference checks one table at a time).
   */
 object QualityChecks {
 
@@ -42,16 +43,16 @@ object QualityChecks {
 
   /** Run the reference's QC battery over the five star-schema outputs:
     * `non_empty` then `key_unique` per table; `non_empty` reads the
-    * row count of the `key_unique` aggregation. */
+    * row count of the `key_unique` aggregation. The five aggregations
+    * are independent and run as concurrent Spark jobs. */
   def checkAll(fact: DataFrame, visa: DataFrame, calendar: DataFrame,
-      country: DataFrame, demographics: DataFrame): Seq[QcResult] = Seq(
-    (fact, "immigration_fact", "record_id"),
-    (visa, "visa_type_dim", "visa_type_key"),
-    (calendar, "immigration_calendar_dim", "id"),
-    (country, "country_dim", "country_code"),
-    (demographics, "usa_demographics_dim", "id"),
-  ).flatMap { case (df, table, key) =>
-    val u = keyUnique(df, table, Seq(key))
-    Seq(QcResult(table, "non_empty", u.count, u.count > 0), u)
-  }
+      country: DataFrame, demographics: DataFrame): Seq[QcResult] =
+    Concurrently.run(Seq(
+      (fact, "immigration_fact", "record_id"),
+      (visa, "visa_type_dim", "visa_type_key"),
+      (calendar, "immigration_calendar_dim", "id"),
+      (country, "country_dim", "country_code"),
+      (demographics, "usa_demographics_dim", "id"),
+    ).map { case (df, table, key) => () => keyUnique(df, table, Seq(key)) })
+      .flatMap(u => Seq(QcResult(u.table, "non_empty", u.count, u.count > 0), u))
 }

@@ -2,7 +2,12 @@ package graft
 
 import java.time.LocalDate
 
+import scala.jdk.CollectionConverters._
+
 import graft.pipeline._
+import org.apache.spark.graftbridge.ListenerBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -102,6 +107,32 @@ class CapstonePipelineSpec extends SparkSpec {
     assert(dim(236L)._1 === "Afghanistan")
     assert(dim(236L)._2.map(_.doubleValue) === Some(5.0)) // dedup kept one 5.0 row
     assert(dim(999L)._1 === null) // unmapped code survives with null name
+  }
+
+  test("temperatureKeyMinima equals cleanTemperature's projection; countryDim agrees over either") {
+    // plant a duplicate key whose temperatures differ: cleanTemperature
+    // keeps the 10.0 row of Mexico City 2013-01-01, not the 30.0 one
+    val planted = temp.union(temp.where(col("City") === "Mexico City" && col("AverageTemperature") === 10.0)
+      .withColumn("AverageTemperature", lit(30.0)))
+    val viaWindow = Clean.cleanTemperature(planted)
+      .select(col("dt"), col("City"), col("Country"), col("AverageTemperature"))
+    val viaAgg = Clean.temperatureKeyMinima(planted)
+    assert(viaAgg.schema === viaWindow.schema)
+    assert(viaAgg.count() === 4)
+    assert(viaAgg.exceptAll(viaWindow).isEmpty && viaWindow.exceptAll(viaAgg).isEmpty)
+
+    val immC = Clean.cleanImmigration(imm)
+    def dim(t: DataFrame): Map[Long, (String, Option[Double])] =
+      StarSchema.countryDim(immC, codes, t).collect().map(r => r.getLong(0) ->
+        (r.getString(1), Option(r.getAs[java.lang.Double](2)).map(_.doubleValue))).toMap
+    val (a, w) = (dim(viaAgg), dim(viaWindow))
+    assert(a.keySet === w.keySet && a.keySet === Set(582L, 236L, 999L))
+    a.keySet.foreach { k =>
+      assert(a(k)._1 === w(k)._1)
+      assert(a(k)._2.isDefined === w(k)._2.isDefined, s"country $k")
+      a(k)._2.zip(w(k)._2).foreach { case (x, y) => assert(math.abs(x - y) <= 1e-9, s"country $k") }
+    }
+    assert(a(582L)._2 === Some(15.0)) // avg(min(10, 30), 20)
   }
 
   test("immigrationFact: renames, visa FK, SAS date conversion, visatype dropped") {
@@ -256,6 +287,72 @@ class CapstonePipelineSpec extends SparkSpec {
     CapstoneEtl.writeStarSchema(bare, s"$dir/bare")
     assert(cacheIsEmpty)
     assert(spark.read.parquet(s"$dir/bare/immigration_calendar_dim").count() === 3)
+  }
+
+  private def causes(e: Throwable): Seq[Throwable] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq
+
+  private def failsWith(e: Throwable, msg: String): Boolean =
+    causes(e).exists(c => Option(c.getMessage).exists(_.contains(msg)))
+
+  /** `df` whose every row raises `msg` when a job evaluates it. */
+  private def planted(df: DataFrame, msg: String): DataFrame =
+    df.where(raise_error(lit(msg)).isNull)
+
+  test("writeStarSchema: a failed write is rethrown after the other tables are written") {
+    val dir = tempDir("capstone_write_failure")
+    val t = CapstoneEtl.buildStarSchema(imm, temp, demo, codes)
+    try {
+      val one = t.copy(country = planted(t.country, "planted country failure"))
+      val e = intercept[Exception](CapstoneEtl.writeStarSchema(one, s"$dir/one"))
+      assert(failsWith(e, "planted country failure"), e)
+      ListenerBridge.drain(spark.sparkContext)
+      assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty)
+      assert(!Thread.getAllStackTraces.keySet.asScala.exists(_.getName == "graft-pipeline-action"))
+      Seq("immigration_fact" -> 5L, "visa_type_dim" -> 4L, "immigration_calendar_dim" -> 3L,
+        "usa_demographics_dim" -> 2L).foreach { case (table, rows) =>
+        assert(spark.read.parquet(s"$dir/one/$table").count() === rows, table)
+      }
+
+      // two failures: the first in table order is thrown, the other suppressed
+      val two = one.copy(visa = planted(t.visa, "planted visa failure"))
+      val e2 = intercept[Exception](CapstoneEtl.writeStarSchema(two, s"$dir/two"))
+      assert(failsWith(e2, "planted visa failure"), e2)
+      assert(e2.getSuppressed.exists(failsWith(_, "planted country failure")))
+    } finally t.release()
+  }
+
+  test("writeStarSchema and checkAll run every job in the caller's job group") {
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        groups.add(Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse("<none>"))
+    }
+    val dir = tempDir("capstone_job_group")
+    sc.addSparkListener(listener)
+    try {
+      // two calls under two groups: a thread that outlived the first call
+      // would carry the first group into the second
+      for (group <- Seq("capstone-spec-a", "capstone-spec-b")) {
+        val t = CapstoneEtl.buildStarSchema(imm, temp, demo, codes)
+        ListenerBridge.drain(sc)
+        groups.clear()
+        sc.setJobGroup(group, group, interruptOnCancel = false)
+        try {
+          CapstoneEtl.writeStarSchema(t, s"$dir/$group")
+          assert(checkAll(t).forall(_.passed))
+        } finally {
+          sc.clearJobGroup()
+          t.release()
+        }
+        ListenerBridge.drain(sc)
+        val seen = groups.asScala.toSeq
+        assert(seen.size >= 10, seen) // five writes and five aggregations at least
+        assert(seen.distinct === Seq(group))
+      }
+    } finally sc.removeSparkListener(listener)
   }
 
   test("release() unpersists the immigration and dimension caches") {

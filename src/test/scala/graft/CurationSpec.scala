@@ -423,6 +423,18 @@ class CurationSpec extends SparkSpec {
     }
   }
 
+  test("q255: with one peel round, converged compares against the input edge count") {
+    import TestSpark.spark.implicits._
+    // a triangle: already the 2-core, while every vertex peels for k = 3
+    val triangle = Seq((1L, 2L), (2L, 3L), (1L, 3L)).toDF("src", "dst")
+    assert(Curation.kcorePeel(triangle, Seq(2, 3), rounds = 1) ===
+      Seq((2, 3L, 3L, true), (3, 0L, 0L, false)))
+    // a pendant edge peels in round 1 for k = 2; round 2 changes nothing
+    val pendant = triangle.union(Seq((3L, 4L)).toDF("src", "dst"))
+    assert(Curation.kcorePeel(pendant, Seq(2), rounds = 1) === Seq((2, 3L, 3L, false)))
+    assert(Curation.kcorePeel(pendant, Seq(2), rounds = 2) === Seq((2, 3L, 3L, true)))
+  }
+
   test("quantizationQa: reconstruction error bounded by scale/2, cosine stays high") {
     val qa = Curation.quantizationQa(spark, sfDir).collect()
     assert(qa.length === Tables.embeddings(spark, sfDir).count())

@@ -72,6 +72,17 @@ class SqlSurfaceSpec extends SparkSpec {
     assert(rows.map(_.getAs[Double]("momentum_idx")).distinct.length > 1)
   }
 
+  test("q226: a zero-revenue month makes every later momentum index NULL, as in the oracle") {
+    // the oracle SQL run by DuckDB over these five months gives
+    // 100, 75, 37.5, NULL, NULL
+    val idx = SqlSurface.momentumChain(Seq(200L, 100L, 0L, 50L, 80L))
+    assert(idx.take(3) === Seq(Some(100.0), Some(75.0), Some(37.5)))
+    // 50 / 0 has no ratio: NULL there and after, never Infinity or NaN
+    assert(idx.drop(3) === Seq(None, None))
+    assert(SqlSurface.momentumChain(Seq(0L, 0L)) === Seq(Some(100.0), None))
+    assert(SqlSurface.momentumChain(Seq.empty) === Seq.empty)
+  }
+
   test("q235: Holt level/trend chain matches a driver-side recurrence replay") {
     val rows = SqlSurface.holtSmoothing(spark, sfDir).collect()
     val monthly = Tables.orders(spark, sfDir)
