@@ -13,11 +13,9 @@ object BenchOne {
     val reps = args.drop(1).find(_.forall(_.isDigit)).map(_.toInt).getOrElse(3)
     val explain = args.contains("--explain")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString).toInt
     // the engine's own session: the ledger measures the config the
     // tests and the benchmark run
-    val spark = GraftSession.local(cpus)
+    val spark = GraftSession.local()
     val d = SparkEntry.allDefs.find(_.name == name)
       .getOrElse(sys.error(s"no such query: $name (see SparkEntry.allDefs)"))
     if (explain) d.build(spark, sfDir).explain("formatted")

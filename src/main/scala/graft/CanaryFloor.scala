@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Idle-floor measurement tool (VERDICT r13 #1): samples the fixed
   * 32-task contention canary N times in a fresh JVM and prints the
   * min / median / max, formatted as the `BENCH_CANARY_FLOOR.json`
@@ -17,13 +15,8 @@ import org.apache.spark.sql.SparkSession
 object CanaryFloor {
   def main(args: Array[String]): Unit = {
     val reps = args.find(_.forall(_.isDigit)).map(_.toInt).getOrElse(7)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString).toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.local(cpus)
     Bench.contentionCanary(spark, cpus) // untimed JIT warm
     Bench.bandwidthCanary(spark, cpus)
     // interleaved sampling (ALU, then bandwidth, per rep) so both

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scaling-evidence probe (SCALE.md): runs the flagship corpus
@@ -35,23 +34,16 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val tenXDir = "/tmp/graft_scale_10x"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.local(cpus)
     // The 100× tier at 32 shuffle partitions gives ~1 GiB sort
     // partitions against ~1.5 GiB/task execution memory — the measured
     // 1.7-2.7× disk spill is partition GRANULARITY, not algorithm; a
     // cluster runs thousands of partitions and never sees it. Override
     // to demonstrate (SCALE.md round 12): partitions sized to ~128 MiB
     // make the spill vanish at identical wire bytes.
-    val shufParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufParts)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    sys.env.get("SPARK_GRAFT_SHUFFLE")
+      .foreach(spark.conf.set("spark.sql.shuffle.partitions", _))
 
     // The heavy-family memory rule, enforced mechanically (VERDICT r12
     // #5): SCALE.md's 100× finding is "≥1 GiB execution memory per task

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -81,15 +80,8 @@ object Verify {
     require(args.length >= 2, "usage: Verify <sfDir> <outDir> [query ...]")
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.local(cpus)
     new java.io.File(outDir).mkdirs()
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     // Per-query wall time of the dump (build + write). This is NOT the
@@ -141,14 +133,14 @@ object Verify {
     // the 1-row floor sees nothing; the canary pair makes that state
     // visible and lets next round's diff label flags contended.
     def canarySample(): Option[Double] =
-      try Some(Bench.contentionCanary(spark, cpus.toInt))
+      try Some(Bench.contentionCanary(spark, cpus))
       catch { case _: Throwable => None }
     try (1 to 3).foreach { _ => // untimed warm, both canaries — THREE
       // reps: the first marks otherwise carry the JVM's own C2/heap-
       // expansion cost and read as a contended span at sweep start
       // (measured r15: mark-0 ALU ~2x, bw ~4x settled values, idle)
-      Bench.contentionCanary(spark, cpus.toInt)
-      Bench.bandwidthCanary(spark, cpus.toInt)
+      Bench.contentionCanary(spark, cpus)
+      Bench.bandwidthCanary(spark, cpus)
     } catch { case _: Throwable => () }
     // Interleaved canary SERIES (r13): the start/end pair is blind to
     // MID-run contention — a concurrent job bracketed by two idle
@@ -193,7 +185,7 @@ object Verify {
       // min-of-2 bw mark (r16, see Bench.bandwidthMark): bracket-max
       // span labeling would amplify a one-shot GC outlier into a
       // whole mislabeled span
-      try bwSeries += ((idx, Bench.bandwidthMark(spark, cpus.toInt)))
+      try bwSeries += ((idx, Bench.bandwidthMark(spark, cpus)))
       catch { case _: Throwable => () }
       try floorFn().foreach(v => floorSeries += ((idx, v)))
       catch { case _: Throwable => () }
@@ -315,7 +307,7 @@ object Verify {
               resampled(name) = Seq(timings(name), w2)
               timings(name) = math.min(timings(name), w2)
               for (a <- canarySample()) {
-                val b = try Bench.bandwidthMark(spark, cpus.toInt)
+                val b = try Bench.bandwidthMark(spark, cpus)
                         catch { case _: Throwable => -1.0 }
                 resampleCanary(name) = (a, b)
               }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Full-surface hot-stage width audit (dev tool, like BenchOne).
   *
   * The round-10/11 class-C findings (q258, q197, q315) were expensive
@@ -14,24 +12,14 @@ import org.apache.spark.sql.SparkSession
   * DPs and collect-based S9 queries are naturally exempt — their hot
   * stage is tiny, under the floor.
   *
-  * Usage: SPARK_GRAFT_CPUS=32 sbt "runMain graft.WidthAudit <sfDir> [minTaskMs]"
+  * Usage: sbt "runMain graft.WidthAudit <sfDir> [minTaskMs]"
   */
 object WidthAudit {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: WidthAudit <sfDir> [minTaskMs]")
     val sfDir = args(0)
     val minTaskMs = if (args.length > 1) args(1).toLong else 500L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString).toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val width = spark.sparkContext.defaultParallelism
 
     val stages = new java.util.concurrent.ConcurrentHashMap[Int, (Int, Long)]()

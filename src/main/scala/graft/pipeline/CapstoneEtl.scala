@@ -183,25 +183,25 @@ object CapstoneEtl {
 
   /** Write the star schema as Parquet; calendar dim hive-partitioned by
     * year/month/week (etl_functions.py:129–130) so downstream date-range
-    * readers get partition pruning. Partitioned writes are clustered —
-    * see [[clusterForWrite]].
+    * readers get partition pruning. The calendar has one row per SAS day
+    * (QC's `key_unique(id)`), so a week leaf holds at most 7 rows: it is
+    * clustered on the partition columns with no salt, one file per leaf
+    * (see [[clusterForWrite]]).
     *
     * The five writes are independent, so they run as concurrent Spark
     * jobs (the reference writes them one after another); this returns
     * once all five have finished. If any write failed, it rethrows the
     * first failure in table order, with the others added as suppressed.
     */
-  def writeStarSchema(t: StarSchemaTables, outDir: String,
-      filesPerLeaf: Int = 0): Unit = {
+  def writeStarSchema(t: StarSchemaTables, outDir: String): Unit = {
+    import org.apache.spark.sql.functions.col
     def save(df: DataFrame, table: String): () => Unit =
       () => df.write.mode(SaveMode.Overwrite).parquet(s"$outDir/$table")
     Concurrently.run(Seq(
       save(t.fact, "immigration_fact"),
       save(t.visa, "visa_type_dim"),
-      // buildStarSchema caches the calendar, which meets clusterForWrite's
-      // caller contract (its leaf-stats action does not re-run the lineage)
-      () => clusterForWrite(t.calendar, filesPerLeaf,
-          "arrival_year", "arrival_month", "arrival_week")
+      () => t.calendar
+        .repartition(col("arrival_year"), col("arrival_month"), col("arrival_week"))
         .write.mode(SaveMode.Overwrite)
         .partitionBy("arrival_year", "arrival_month", "arrival_week")
         .parquet(s"$outDir/immigration_calendar_dim"),
@@ -245,13 +245,7 @@ object CapstoneEtl {
   def main(args: Array[String]): Unit = {
     require(args.length == 2, "usage: CapstoneEtl <inputDir> <outputDir>")
     val (in, out) = (args(0), args(1))
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("capstone-etl")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(master = sys.env.get("SPARK_MASTER"))
 
     val tables = buildStarSchema(
       readImmigration(spark, s"$in/immigration.csv"),

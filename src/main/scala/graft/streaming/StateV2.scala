@@ -22,7 +22,7 @@ import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor,
   * Scale design: state volume is O(|users|) with a hard O(1) bound per
   * key (the list is clamped to 3); each micro-batch shuffles only its
   * delta to the state-store partitions. Requires the RocksDB state
-  * store provider (`GraftSession.twsConfs`), which is also the right
+  * store provider ([[twsConfs]]), which is also the right
   * provider at scale: state lives off-heap and spills to disk, so a
   * 100 TB stream's key space is bounded by storage, not executor heap.
   * All arithmetic is integer cents; the batch is sorted by

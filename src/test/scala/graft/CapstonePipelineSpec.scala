@@ -41,6 +41,18 @@ class CapstonePipelineSpec extends SparkSpec {
 
   private def cacheIsEmpty: Boolean = spark.sharedState.cacheManager.isEmpty
 
+  /** Parquet files in each leaf directory of a partitioned table. */
+  private def leafFiles(root: String): Seq[Int] = {
+    def walk(d: java.io.File): Seq[java.io.File] = {
+      val kids = Option(d.listFiles()).getOrElse(Array.empty).toSeq
+      val dirs = kids.filter(_.isDirectory)
+      if (dirs.isEmpty) Seq(d) else dirs.flatMap(walk)
+    }
+    walk(new java.io.File(root))
+      .map(_.listFiles().count(_.getName.endsWith(".parquet")))
+      .filter(_ > 0)
+  }
+
   test("cleanImmigration drops sparse columns and all-null rows") {
     val cleaned = Clean.cleanImmigration(imm)
     assert(!cleaned.columns.contains("occup"))
@@ -391,16 +403,6 @@ class CapstonePipelineSpec extends SparkSpec {
     // file(s) in each leaf — asserted here with a 16-partition input
     // spread across every leaf, the shape that explodes unclustered.
     import TestSpark.spark.implicits._
-    def leafFiles(root: String): Seq[Int] = {
-      def walk(d: java.io.File): Seq[java.io.File] = {
-        val kids = Option(d.listFiles()).getOrElse(Array.empty).toSeq
-        val dirs = kids.filter(_.isDirectory)
-        if (dirs.isEmpty) Seq(d) else dirs.flatMap(walk)
-      }
-      walk(new java.io.File(root))
-        .map(_.listFiles().count(_.getName.endsWith(".parquet")))
-        .filter(_ > 0)
-    }
     val rows = (1L to 400L)
       .map(i => (i, java.sql.Date.valueOf(f"2016-${(i % 6 + 1)}%02d-${(i % 27 + 1)}%02d")))
     val batch = rows.toDF("record_id", "arrdate").repartition(16)
@@ -433,6 +435,11 @@ class CapstonePipelineSpec extends SparkSpec {
     writeInputs(s"$dir/in")
     val t = buildFromCsv(s"$dir/in")
     CapstoneEtl.writeStarSchema(t, s"$dir/out")
+    // a week leaf holds up to 7 SAS days: seven days per leaf, spread
+    // over 4 input partitions, must still land as one file per leaf
+    val spread = t.calendar.crossJoin(spark.range(7).toDF("day"))
+      .withColumn("id", col("id") * 7 + col("day")).drop("day").repartition(4)
+    CapstoneEtl.writeStarSchema(t.copy(calendar = spread), s"$dir/spread")
     t.release()
 
     val fact = spark.read.parquet(s"$dir/out/immigration_fact")
@@ -443,5 +450,10 @@ class CapstonePipelineSpec extends SparkSpec {
     val yearDirs = new java.io.File(s"$dir/out/immigration_calendar_dim")
       .listFiles().filter(_.getName.startsWith("arrival_year="))
     assert(yearDirs.nonEmpty)
+    for (out <- Seq("out", "spread")) {
+      val files = leafFiles(s"$dir/$out/immigration_calendar_dim")
+      assert(files.size === 3 && files.forall(_ == 1), s"$out: parquet files per leaf: $files")
+    }
+    assert(spark.read.parquet(s"$dir/spread/immigration_calendar_dim").count() === 21)
   }
 }

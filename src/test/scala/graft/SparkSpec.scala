@@ -7,20 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * ScalaTest suites run sequentially in one forked JVM per `build.sbt`).
   */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    // the status store retains plan-description strings per execution
-    // (default 1000) even with the UI off — across a 40-suite run over
-    // hundreds of wide plans that is the dominant driver-heap leak
-    .config("spark.sql.ui.retainedExecutions", "20")
-    .config("spark.ui.retainedJobs", "100")
-    .config("spark.ui.retainedStages", "100")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.local(4)
 
   /** Smallest driver corpus — read-only, used for cross-checks. */
   val sfDir = "/root/testdata/sf0.001"
