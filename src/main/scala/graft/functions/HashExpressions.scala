@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.{conv, md5, substring}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -284,6 +285,27 @@ case class MinHashSigFromHashes(child: Expression, numHashes: Int)
 }
 
 object HashFunctions {
+  /** The portable md5 uniform of a string key: the first 15 hex digits
+    * of `md5(key)` read big-endian as a long, so the value lies in
+    * [0, 2⁶⁰) and equals [[SigImpl.hash60]] of the key's UTF-8 bytes.
+    * md5 is the same in every engine, so the DuckDB oracle replays each
+    * draw bit-for-bit through [[md5U60Sql]]. Callers build the key
+    * (separators, prefixes) and apply their own arithmetic after the
+    * hash (`% n`, `pmod`, `(u + 0.5) / 2⁶⁰`).
+    */
+  def md5U60(key: Column): Column =
+    conv(substring(md5(key), 1, 15), 16, 10).cast("long")
+
+  /** [[md5U60]] as DuckDB SQL over the VARCHAR expression `key`: a fold
+    * of the same 15 hex digits, most significant first. The lambda
+    * parameters carry a `u60_` prefix so that they never shadow a
+    * column or an enclosing lambda parameter the key refers to.
+    */
+  def md5U60Sql(key: String): String =
+    "list_reduce(list_transform(generate_series(1, 15), u60_i -> " +
+      s"strpos('0123456789abcdef', substring(md5($key), u60_i, 1)) - 1), " +
+      "(u60_acc, u60_d) -> u60_acc * 16 + u60_d)"
+
   /** Column API for the custom expressions. */
   def simhash64(c: Column): Column =
     ColumnBridge.column(SimHash64(ColumnBridge.expression(c)))

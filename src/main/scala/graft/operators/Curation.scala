@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Checkpoints, Materialize, QueryDef, QueryModule, Tables}
+import graft.functions.HashFunctions.{md5U60, md5U60Sql}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1379,9 +1380,7 @@ object Curation extends QueryModule {
     * Linear scans + two small shuffles; holds at 100 TB.
     */
   def splitLeakage(spark: SparkSession, dir: String): DataFrame = {
-    val bucket = expr(
-      "cast(conv(substring(md5(cast(doc_id as string)), 1, 15), 16, 10) " +
-        "as bigint) % 100")
+    val bucket = md5U60(col("doc_id").cast("string")) % 100
     val perFpSplit = Tables.documents(spark, dir)
       .select(col("doc_id"),
         md5(lower(substring(col("text"), 1, 100))).as("fp"),
@@ -1409,17 +1408,11 @@ object Curation extends QueryModule {
   }
 
   private val splitLeakageSql =
-    """WITH d AS (
+    s"""WITH d AS (
       |  SELECT doc_id, md5(lower(substr(text, 1, 100))) AS fp,
       |    CASE
-      |      WHEN list_reduce(list_transform(generate_series(1, 15),
-      |          i -> strpos('0123456789abcdef',
-      |                 substring(md5(doc_id::VARCHAR), i, 1)) - 1),
-      |        (acc, dd) -> acc * 16 + dd) % 100 < 80 THEN 'train'
-      |      WHEN list_reduce(list_transform(generate_series(1, 15),
-      |          i -> strpos('0123456789abcdef',
-      |                 substring(md5(doc_id::VARCHAR), i, 1)) - 1),
-      |        (acc, dd) -> acc * 16 + dd) % 100 < 90 THEN 'val'
+      |      WHEN ${md5U60Sql("doc_id::VARCHAR")} % 100 < 80 THEN 'train'
+      |      WHEN ${md5U60Sql("doc_id::VARCHAR")} % 100 < 90 THEN 'val'
       |      ELSE 'test' END AS split
       |  FROM documents
       |), fs AS (

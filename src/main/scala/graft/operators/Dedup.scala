@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Checkpoints, Materialize, QueryDef, QueryModule, Tables}
+import graft.functions.HashFunctions.{md5U60, md5U60Sql}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -296,12 +297,10 @@ object Dedup extends QueryModule {
     * filter.
     */
   private val simHashOracleSql =
-    """WITH toks AS (
+    s"""WITH toks AS (
       |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
       |), hashed AS (
-      |  SELECT doc_id, list_reduce(list_transform(generate_series(1, 15),
-      |      i -> strpos('0123456789abcdef', substring(md5(tok), i, 1)) - 1),
-      |    (acc, d) -> acc * 16 + d) AS h
+      |  SELECT doc_id, ${md5U60Sql("tok")} AS h
       |  FROM toks
       |), votes AS (
       |  SELECT doc_id, bb.b AS b,
@@ -706,10 +705,9 @@ object Dedup extends QueryModule {
       .persist()
     // portable 16-hash signature: h_i = min over shingles of the 60-bit
     // md5 fold of "i:shingle"
-    val sig = sh.select(col("doc_id"), expr(
-      """transform(sequence(0, 15), i -> array_min(transform(sh,
-        |  s -> cast(conv(substring(md5(concat(cast(i as string), ':', s)), 1, 15),
-        |            16, 10) as bigint))))""".stripMargin).as("sig"))
+    val sig = sh.select(col("doc_id"),
+      transform(sequence(lit(0), lit(15)), i => array_min(transform(col("sh"),
+        s => md5U60(concat(i.cast("string"), lit(":"), s))))).as("sig"))
     val banded = sig.select(col("doc_id"), posexplode(expr(
         "transform(sequence(0, 7), b -> struct(sig[b*2] as h0, sig[b*2+1] as h1))")))
       .select(col("doc_id"), col("pos").as("band"),
@@ -750,7 +748,7 @@ object Dedup extends QueryModule {
   }
 
   private val lshRecallAuditSql =
-    """WITH t AS (
+    s"""WITH t AS (
       |  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
       |), s AS (
       |  SELECT doc_id,
@@ -761,10 +759,7 @@ object Dedup extends QueryModule {
       |  SELECT doc_id,
       |    list_transform(generate_series(0, 15), i ->
       |      list_min(list_transform(sh, x ->
-      |        list_reduce(list_transform(generate_series(1, 15),
-      |          k -> strpos('0123456789abcdef',
-      |                 substring(md5(i::VARCHAR || ':' || x), k, 1)) - 1),
-      |          (acc, d) -> acc * 16 + d)))) AS sig
+      |        ${md5U60Sql("i::VARCHAR || ':' || x")}))) AS sig
       |  FROM s
       |), banded AS (
       |  SELECT doc_id, bb.band,

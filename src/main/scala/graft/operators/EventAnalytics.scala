@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Materialize, QueryDef, QueryModule, Tables}
+import graft.functions.HashFunctions.{md5U60, md5U60Sql}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1769,8 +1770,7 @@ object EventAnalytics extends QueryModule {
   def sprtMonitor(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(spark, dir)
       .select(
-        expr("cast(conv(substring(md5(cast(user_id as string)), 1, 15), " +
-          "16, 10) as bigint) % 2").as("variant"),
+        (md5U60(col("user_id").cast("string")) % 2).as("variant"),
         (unix_micros(col("ts")) / lit(86400000000L)).cast("long").as("d"),
         when(col("event_type") === "purchase", 1L).otherwise(0L).as("y"))
     val daily = ev.groupBy(col("variant"), col("d"))
@@ -1818,10 +1818,7 @@ object EventAnalytics extends QueryModule {
 
   private val sprtMonitorSql =
     s"""WITH ev AS (
-       |  SELECT list_reduce(list_transform(generate_series(1, 15),
-       |      j -> strpos('0123456789abcdef',
-       |             substring(md5(user_id::VARCHAR), j, 1)) - 1),
-       |      (acc, x) -> acc * 16 + x) % 2 AS variant,
+       |  SELECT ${md5U60Sql("user_id::VARCHAR")} % 2 AS variant,
        |    epoch_us(ts) // 86400000000 AS d,
        |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
        |  FROM events
@@ -2220,8 +2217,8 @@ object EventAnalytics extends QueryModule {
     val w = 256
     val ev = Tables.events(spark, dir).select(col("user_id"))
     def bucket(i: Column, key: Column): Column =
-      pmod(conv(substring(md5(concat(i.cast("string"), lit(":"),
-        key.cast("string"))), 1, 15), 16, 10).cast("long"), lit(w.toLong))
+      pmod(md5U60(concat(i.cast("string"), lit(":"), key.cast("string"))),
+        lit(w.toLong))
     val rows = ev.select(col("user_id"),
         explode(sequence(lit(0), lit(d - 1))).as("i"))
       .select(col("i"), bucket(col("i"), col("user_id")).as("bucket"))
@@ -2247,13 +2244,9 @@ object EventAnalytics extends QueryModule {
   }
 
   private val countMinSql =
-    """WITH hx AS (
+    s"""WITH hx AS (
       |  SELECT e.user_id, s.i,
-      |    list_reduce(list_transform(generate_series(1, 15),
-      |        j -> strpos('0123456789abcdef',
-      |               substring(md5(s.i::VARCHAR || ':' || e.user_id::VARCHAR),
-      |                         j, 1)) - 1),
-      |      (acc, dd) -> acc * 16 + dd) % 256 AS bucket
+      |    ${md5U60Sql("s.i::VARCHAR || ':' || e.user_id::VARCHAR")} % 256 AS bucket
       |  FROM events e
       |  CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS i) s
       |), cms AS (
@@ -2263,11 +2256,7 @@ object EventAnalytics extends QueryModule {
       |  GROUP BY 1 ORDER BY exact_n DESC, user_id LIMIT 15
       |), pb AS (
       |  SELECT p.user_id, p.exact_n, s.i,
-      |    list_reduce(list_transform(generate_series(1, 15),
-      |        j -> strpos('0123456789abcdef',
-      |               substring(md5(s.i::VARCHAR || ':' || p.user_id::VARCHAR),
-      |                         j, 1)) - 1),
-      |      (acc, dd) -> acc * 16 + dd) % 256 AS bucket
+      |    ${md5U60Sql("s.i::VARCHAR || ':' || p.user_id::VARCHAR")} % 256 AS bucket
       |  FROM probes p
       |  CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS i) s
       |)

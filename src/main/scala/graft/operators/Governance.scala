@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, QueryModule, Tables}
+import graft.functions.HashFunctions.{md5U60, md5U60Sql}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -439,9 +440,9 @@ object Governance extends QueryModule {
     */
   def dpCountRelease(spark: SparkSession, dir: String): DataFrame = {
     val two60 = math.pow(2.0, 60)
-    val u = expr(
-      "(cast(conv(substring(md5(concat(event_type, ':', cast(day as string))), " +
-        "1, 15), 16, 10) as bigint) + 0.5) / " + s"$two60")
+    // a decimal 0.5 keeps u + 0.5 exact until the division rounds
+    val u = (md5U60(concat(col("event_type"), lit(":"),
+      col("day").cast("string"))) + lit(BigDecimal("0.5"))) / two60
     Tables.events(spark, dir)
       .select(col("event_type"), to_date(col("ts")).as("day"))
       .groupBy(col("event_type"), col("day"))
@@ -462,10 +463,8 @@ object Governance extends QueryModule {
        |  FROM events GROUP BY 1, 2
        |), n AS (
        |  SELECT event_type, day, true_n,
-       |    (list_reduce(list_transform(generate_series(1, 15),
-       |        i -> strpos('0123456789abcdef',
-       |               substring(md5(event_type || ':' || day::VARCHAR), i, 1)) - 1),
-       |      (acc, d) -> acc * 16 + d) + 0.5) / ${math.pow(2.0, 60)} AS u
+       |    (${md5U60Sql("event_type || ':' || day::VARCHAR")} + 0.5)
+       |      / ${math.pow(2.0, 60)} AS u
        |  FROM g
        |)
        |SELECT event_type, day, true_n,

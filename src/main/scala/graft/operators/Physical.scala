@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{QueryDef, QueryModule, Tables}
 import graft.functions.ZOrderFunctions.zorder2
+import graft.functions.HashFunctions.{md5U60, md5U60Sql}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -393,8 +394,8 @@ object Physical extends QueryModule {
     * claim (~new/total = 20%) — THE property that makes shard/cache
     * topology changes survivable at 100 TB, quantified on real keys.
     *
-    * Both ring positions derive from the portable md5 uniform (the
-    * q257/q268 idiom) so Spark and the oracle build the identical
+    * Both ring positions derive from the portable md5 uniform
+    * (`HashFunctions.md5U60`) so Spark and the oracle build the identical
     * ring with no RNG state. Assignment = the lowest vnode position
     * ≥ the doc's position (wrap to the global minimum) — resolved
     * with min-aggregates against the BROADCAST vnode table (S·R ≤ 160
@@ -402,14 +403,12 @@ object Physical extends QueryModule {
     */
   def consistentHashing(spark: SparkSession, dir: String): DataFrame = {
     val two60 = math.pow(2.0, 60)
-    def mdU(s: Column): Column =
-      (conv(substring(md5(s), 1, 15), 16, 10).cast("bigint") + 0.5) / two60
     def vnodes(nShards: Int): DataFrame = {
       val rows = spark.range(nShards).select(col("id").cast("int").as("shard"))
         .crossJoin(spark.range(8).select(col("id").cast("int").as("replica")))
       rows.select(col("shard"),
-        mdU(concat(lit("n:"), col("shard").cast("string"), lit(":"),
-          col("replica").cast("string"))).as("vu"))
+        ((md5U60(concat(lit("n:"), col("shard").cast("string"), lit(":"),
+          col("replica").cast("string"))) + 0.5) / two60).as("vu"))
     }
     def assign(docs: DataFrame, vn: DataFrame, out: String): DataFrame = {
       val j = docs.crossJoin(broadcast(vn))
@@ -422,7 +421,8 @@ object Physical extends QueryModule {
     }
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"),
-        mdU(concat(lit("d:"), col("doc_id").cast("string"))).as("du"))
+        ((md5U60(concat(lit("d:"), col("doc_id").cast("string"))) + 0.5) / two60)
+          .as("du"))
     val r16 = assign(docs, vnodes(16), "s16")
     val r20 = assign(docs, vnodes(20), "s20")
     r16.join(r20, Seq("doc_id"))
@@ -440,10 +440,7 @@ object Physical extends QueryModule {
   }
 
   private val consistentHashingSql = {
-    val u = (s: String) =>
-      s"(list_reduce(list_transform(generate_series(1, 15), " +
-        s"i -> strpos('0123456789abcdef', substring(md5($s), i, 1)) - 1), " +
-        s"(acc, d) -> acc * 16 + d) + 0.5) / ${math.pow(2.0, 60)}"
+    val u = (s: String) => s"(${md5U60Sql(s)} + 0.5) / ${math.pow(2.0, 60)}"
     s"""WITH docs AS (
        |  SELECT doc_id, ${u("'d:' || doc_id::VARCHAR")} AS du FROM documents
        |), vn AS (

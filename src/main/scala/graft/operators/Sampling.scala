@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, QueryModule, Tables}
+import graft.functions.HashFunctions.{md5U60, md5U60Sql}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -15,10 +16,10 @@ import org.apache.spark.sql.functions._
   *    → ln(u)/w), so candidate scoring is map-side; the global top-k
   *    lands in `TakeOrderedAndProject` — partial per-partition top-k,
   *    k rows to one reducer, never a full sort;
-  *  - portable determinism: the uniform derives from md5(doc_id), not
-  *    `rand()`, so the same sample comes back on any cluster, any
-  *    partitioning, any retry — auditable sampling, and the whole
-  *    path is SQL-replayable for the oracle;
+  *  - portable determinism: the uniform is `HashFunctions.md5U60` of
+  *    the doc id, not `rand()`, so the same sample comes back on any
+  *    cluster, any partitioning, any retry — auditable sampling, and
+  *    the whole path is SQL-replayable for the oracle (`md5U60Sql`);
   *  - nucleus truncation runs its window over the SOURCE-level
   *    aggregate (hundreds of rows at any corpus size), and the
   *    in-nucleus verdict is integer math (10·cum_prev < 9·total) —
@@ -38,8 +39,7 @@ object Sampling extends QueryModule {
   def weightedSample(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .select(col("doc_id"), col("n_chars"))
-      .withColumn("h",
-        conv(substring(md5(col("doc_id").cast("string")), 1, 15), 16, 10).cast("long"))
+      .withColumn("h", md5U60(col("doc_id").cast("string")))
       .withColumn("u", (col("h") + 1).cast("double") / lit(two60).cast("double"))
       .withColumn("k", log(col("u")) / col("n_chars"))
       .orderBy(col("k").desc, col("doc_id"))
@@ -50,9 +50,7 @@ object Sampling extends QueryModule {
   private val weightedSampleSql =
     s"""WITH h AS (
        |  SELECT doc_id, n_chars,
-       |    list_reduce(list_transform(generate_series(1, 15),
-       |        i -> strpos('0123456789abcdef', substring(md5(doc_id::VARCHAR), i, 1)) - 1),
-       |      (acc, d) -> acc * 16 + d) AS h
+       |    ${md5U60Sql("doc_id::VARCHAR")} AS h
        |  FROM documents
        |), k AS (
        |  SELECT doc_id, n_chars,
@@ -197,8 +195,7 @@ object Sampling extends QueryModule {
     val w = Window.partitionBy(col("source")).orderBy(col("k").desc, col("doc_id"))
     Tables.documents(spark, dir)
       .select(col("source"), col("doc_id"), col("n_chars"))
-      .withColumn("h",
-        conv(substring(md5(col("doc_id").cast("string")), 1, 15), 16, 10).cast("long"))
+      .withColumn("h", md5U60(col("doc_id").cast("string")))
       .withColumn("u", (col("h") + 1).cast("double") / lit(two60).cast("double"))
       .withColumn("k", log(col("u")) / col("n_chars"))
       .withColumn("rank", row_number().over(w))
@@ -211,9 +208,7 @@ object Sampling extends QueryModule {
   private val weightedGroupSampleSql =
     s"""WITH h AS (
        |  SELECT source, doc_id, n_chars,
-       |    list_reduce(list_transform(generate_series(1, 15),
-       |        i -> strpos('0123456789abcdef', substring(md5(doc_id::VARCHAR), i, 1)) - 1),
-       |      (acc, d) -> acc * 16 + d) AS h
+       |    ${md5U60Sql("doc_id::VARCHAR")} AS h
        |  FROM documents
        |), k AS (
        |  SELECT source, doc_id, n_chars,
@@ -246,9 +241,7 @@ object Sampling extends QueryModule {
     * user rollup the audit needs anyway.
     */
   def groupSplit(spark: SparkSession, dir: String): DataFrame = {
-    val bucket = expr(
-      "cast(conv(substring(md5(cast(user_id as string)), 1, 15), 16, 10) " +
-        "as bigint) % 100")
+    val bucket = md5U60(col("user_id").cast("string")) % 100
     val perUser = Tables.events(spark, dir)
       .select(col("user_id"), col("event_type"),
         round(col("value") * 100).cast("long").as("c"))
@@ -271,15 +264,12 @@ object Sampling extends QueryModule {
   }
 
   private val groupSplitSql =
-    """WITH pu AS (
+    s"""WITH pu AS (
       |  SELECT user_id, count(*) AS n_events,
       |    sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
       |      AS n_purchases,
       |    sum(round(value * 100)::BIGINT) AS value_c,
-      |    list_reduce(list_transform(generate_series(1, 15),
-      |        j -> strpos('0123456789abcdef',
-      |               substring(md5(user_id::VARCHAR), j, 1)) - 1),
-      |      (acc, d) -> acc * 16 + d) % 100 AS bucket
+      |    ${md5U60Sql("user_id::VARCHAR")} % 100 AS bucket
       |  FROM events GROUP BY user_id
       |), s AS (
       |  SELECT CASE WHEN bucket < 80 THEN 'train'
@@ -326,8 +316,8 @@ object Sampling extends QueryModule {
       .groupBy(datediff(to_date(col("o_orderdate")), lit("1970-01-01"))
         .cast("long").as("d"))
       .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("x"))
-    val u = expr("cast(conv(substring(md5(concat(cast(d as string), '_', " +
-      "cast(b as string))), 1, 15), 16, 10) as bigint)")
+    val u = md5U60(concat(col("d").cast("string"), lit("_"),
+      col("b").cast("string")))
     val wCol = poissonThresholds.zipWithIndex
       .foldRight(lit(8L): org.apache.spark.sql.Column) {
         case ((thr, k), rest) => when(u < thr, k.toLong).otherwise(rest)
@@ -383,11 +373,7 @@ object Sampling extends QueryModule {
        |  FROM orders GROUP BY 1
        |), reps AS (
        |  SELECT d, x, b,
-       |    list_reduce(list_transform(generate_series(1, 15),
-       |        j -> strpos('0123456789abcdef',
-       |               substring(md5(d::VARCHAR || '_' || b::VARCHAR), j, 1))
-       |             - 1),
-       |      (acc, h) -> acc * 16 + h) AS u60
+       |    ${md5U60Sql("d::VARCHAR || '_' || b::VARCHAR")} AS u60
        |  FROM daily CROSS JOIN (SELECT unnest(generate_series(0, 199)) AS b)
        |), weighted AS (
        |  SELECT b, d, x,
@@ -533,9 +519,7 @@ object Sampling extends QueryModule {
     * the fact is scanned once.
     */
   def targetEncoding(spark: SparkSession, dir: String): DataFrame = {
-    val fold = expr(
-      "cast(conv(substring(md5(cast(o_orderkey as string)), 1, 15), 16, 10) " +
-        "as bigint) % 5")
+    val fold = md5U60(col("o_orderkey").cast("string")) % 5
     val base = Tables.orders(spark, dir)
       .join(broadcast(Tables.customer(spark, dir)
         .select(col("c_custkey"), col("c_nationkey"))),
@@ -560,12 +544,9 @@ object Sampling extends QueryModule {
   }
 
   private val targetEncodingSql =
-    """WITH base AS (
+    s"""WITH base AS (
       |  SELECT n.n_name AS nation,
-      |    list_reduce(list_transform(generate_series(1, 15),
-      |        j -> strpos('0123456789abcdef',
-      |               substring(md5(o.o_orderkey::VARCHAR), j, 1)) - 1),
-      |      (acc, d) -> acc * 16 + d) % 5 AS fold,
+      |    ${md5U60Sql("o.o_orderkey::VARCHAR")} % 5 AS fold,
       |    CASE WHEN o.o_orderstatus = 'F' THEN 1 ELSE 0 END AS label
       |  FROM orders o
       |  JOIN customer c ON o.o_custkey = c.c_custkey
@@ -600,9 +581,8 @@ object Sampling extends QueryModule {
       .distinct()
     val spine = explode(array(lit(6), lit(8), lit(10))).as("k")
     val hashed = cats.select(col("cat"), spine)
-      .withColumn("bucket", expr(
-        "cast(conv(substring(md5(cat), 1, 15), 16, 10) as bigint) " +
-          "% cast(pow(2, k) as bigint)"))
+      .withColumn("bucket",
+        md5U60(col("cat")) % pow(lit(2), col("k")).cast("long"))
     val byBucket = hashed.groupBy(col("k"), col("bucket"))
       .agg(count(lit(1)).as("load"))
     byBucket.groupBy(col("k"))
@@ -616,13 +596,11 @@ object Sampling extends QueryModule {
   }
 
   private val featureHashingSql =
-    """WITH cats AS (
+    s"""WITH cats AS (
       |  SELECT DISTINCT concat_ws('|', p_brand, p_type) AS cat FROM part
       |), hashed AS (
       |  SELECT s.k,
-      |    list_reduce(list_transform(generate_series(1, 15),
-      |        j -> strpos('0123456789abcdef', substring(md5(cat), j, 1)) - 1),
-      |      (acc, d) -> acc * 16 + d) % (2 ** s.k)::BIGINT AS bucket
+      |    ${md5U60Sql("cat")} % (2 ** s.k)::BIGINT AS bucket
       |  FROM cats CROSS JOIN (SELECT unnest([6, 8, 10]) AS k) s
       |), byb AS (
       |  SELECT k, bucket, count(*) AS load FROM hashed GROUP BY k, bucket

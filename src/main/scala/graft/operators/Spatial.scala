@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, QueryModule, Tables}
+import graft.functions.HashFunctions.{md5U60, md5U60Sql}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -35,9 +36,7 @@ object Spatial extends QueryModule {
 
   /** 60-bit md5 uniform → integer micro-degree coordinates. */
   private def withCoords(df: DataFrame, idCol: String): DataFrame =
-    df.withColumn("h",
-        conv(substring(md5(col(idCol).cast("string")), 1, 15), 16, 10)
-          .cast("long"))
+    df.withColumn("h", md5U60(col(idCol).cast("string")))
       .withColumn("lat",
         (col("h") % 120000000L).cast("double") / 1e6 - 60.0)
       .withColumn("lon",
@@ -90,10 +89,7 @@ object Spatial extends QueryModule {
   private val radiusJoinSql =
     s"""WITH ch AS (
        |  SELECT c_custkey,
-       |    list_reduce(list_transform(generate_series(1, 15),
-       |        i -> strpos('0123456789abcdef',
-       |               substring(md5(c_custkey::VARCHAR), i, 1)) - 1),
-       |      (acc, d) -> acc * 16 + d) AS h
+       |    ${md5U60Sql("c_custkey::VARCHAR")} AS h
        |  FROM customer
        |), cust AS (
        |  SELECT c_custkey,
@@ -106,10 +102,7 @@ object Spatial extends QueryModule {
        |  FROM cust
        |), sh AS (
        |  SELECT s_suppkey, s_nationkey,
-       |    list_reduce(list_transform(generate_series(1, 15),
-       |        i -> strpos('0123456789abcdef',
-       |               substring(md5(s_suppkey::VARCHAR), i, 1)) - 1),
-       |      (acc, d) -> acc * 16 + d) AS h
+       |    ${md5U60Sql("s_suppkey::VARCHAR")} AS h
        |  FROM supplier
        |), supp AS (
        |  SELECT s_suppkey, s_nationkey,

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Materialize, QueryDef, QueryModule, Tables}
+import graft.functions.HashFunctions.md5U60Sql
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -847,14 +848,12 @@ object SqlSurface extends QueryModule {
   }
 
   private val sqlCustomExprSql =
-    """WITH toks AS (
+    s"""WITH toks AS (
       |  SELECT doc_id, lang, unnest(string_split(text, ' ')) AS tok
       |  FROM documents
       |), hashed AS (
       |  SELECT doc_id, lang,
-      |    list_reduce(list_transform(generate_series(1, 15),
-      |      i -> strpos('0123456789abcdef', substring(md5(tok), i, 1)) - 1),
-      |      (acc, d) -> acc * 16 + d) AS h
+      |    ${md5U60Sql("tok")} AS h
       |  FROM toks
       |), votes AS (
       |  SELECT doc_id, lang, bb.b AS b,

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Materialize, QueryDef, QueryModule, Tables}
+import graft.functions.HashFunctions.{md5U60, md5U60Sql}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1878,19 +1879,18 @@ object TradeAnalytics extends QueryModule {
   /** The DIMSUM keep draw for an expanded pair `p` (doc_a, doc_b,
     * nsh_a, nsh_b) of customer `cust`: emit with probability
     * p = min(1, γ/√(nᵢnⱼ)), the Bernoulli draw being the portable md5
-    * uniform of `cust|doc_a|doc_b` mod 1e6. The ||'s left arm
-    * (p = 1 ⟺ γ ≥ √(nᵢ·nⱼ)) short-circuits the md5 for pairs sampling
-    * never touches — at toy degrees that is most pairs, at production
-    * degrees none, and the predicate VALUE is identical either way.
-    * Production swaps the portable md5 (the DuckDB-replayable oracle
-    * contract) for a native 64-bit hash. */
+    * uniform (`HashFunctions.md5U60`) of `cust|doc_a|doc_b` mod 1e6.
+    * The ||'s left arm (p = 1 ⟺ γ ≥ √(nᵢ·nⱼ)) short-circuits the md5
+    * for pairs sampling never touches — at toy degrees that is most
+    * pairs, at production degrees none, and the predicate VALUE is
+    * identical either way. Production swaps the portable md5 (the
+    * DuckDB-replayable oracle contract) for a native 64-bit hash. */
   private def dimsumKeep(gamma: Double): Column = {
     val rootProd = sqrt(
       (col("p.nsh_a").cast("long") * col("p.nsh_b")).cast("double"))
     val pKeep = least(lit(1.0), lit(gamma) / rootProd)
-    val u = pmod(conv(substring(md5(concat_ws("|",
-        col("cust").cast("string"), col("p.doc_a").cast("string"),
-        col("p.doc_b").cast("string"))), 1, 15), 16, 10).cast("long"),
+    val u = pmod(md5U60(concat_ws("|", col("cust").cast("string"),
+        col("p.doc_a").cast("string"), col("p.doc_b").cast("string"))),
       lit(1000000L))
     lit(gamma) >= rootProd || u.cast("double") < pKeep * lit(1e6)
   }
@@ -2353,11 +2353,8 @@ object TradeAnalytics extends QueryModule {
       |  JOIN itemn nx ON nx.item = x.item
       |  JOIN itemn ny ON ny.item = y.item
       |  WHERE ${DimsumGamma} >= sqrt((nx.n_cust * ny.n_cust)::DOUBLE)
-      |    OR (list_reduce(list_transform(generate_series(1, 15),
-      |      i -> strpos('0123456789abcdef', substring(md5(
-      |        x.cust::VARCHAR || '|' || x.item::VARCHAR || '|' ||
-      |        y.item::VARCHAR), i, 1)) - 1),
-      |      (acc, d) -> acc * 16 + d) % 1000000)::DOUBLE
+      |    OR (${md5U60Sql("x.cust::VARCHAR || '|' || x.item::VARCHAR" +
+        " || '|' || y.item::VARCHAR")} % 1000000)::DOUBLE
       |    < least(1.0, ${DimsumGamma} / sqrt((nx.n_cust * ny.n_cust)::DOUBLE))
       |      * 1e6
       |), emits AS (
@@ -2788,8 +2785,8 @@ object TradeAnalytics extends QueryModule {
       .select(col("cust"), col("n"), explode(expr(
         s"sequence(0, ${nCand - 1})")).as("i"))
       .withColumn("item",
-        expr("1 + cast(conv(substring(md5(concat(cast(cust as string), ':', " +
-          "cast(i as string))), 1, 15), 16, 10) as bigint) % n"))
+        lit(1) + md5U60(concat(col("cust").cast("string"), lit(":"),
+          col("i").cast("string"))) % col("n"))
       .select(col("cust"), col("i"), col("item"))
     val dedup = cand.groupBy(col("cust"), col("item"))
       .agg(min(col("i")).as("i"))
@@ -2802,18 +2799,15 @@ object TradeAnalytics extends QueryModule {
   }
 
   private val negativeSamplesSql =
-    """WITH baskets AS (
+    s"""WITH baskets AS (
       |  SELECT DISTINCT o.o_custkey AS cust, l.l_partkey AS item
       |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
       |), n AS (SELECT max(p_partkey) AS n FROM part),
       |users AS (SELECT DISTINCT cust FROM baskets),
       |cand AS (
       |  SELECT u.cust, s.i,
-      |    1 + list_reduce(list_transform(generate_series(1, 15),
-      |        j -> strpos('0123456789abcdef',
-      |               substring(md5(u.cust::VARCHAR || ':' || s.i::VARCHAR),
-      |                         j, 1)) - 1),
-      |      (acc, d) -> acc * 16 + d) % (SELECT n FROM n) AS item
+      |    1 + ${md5U60Sql("u.cust::VARCHAR || ':' || s.i::VARCHAR")}
+      |      % (SELECT n FROM n) AS item
       |  FROM users u
       |  CROSS JOIN (SELECT unnest(generate_series(0, 15)) AS i) s
       |), dedup AS (
@@ -3714,9 +3708,8 @@ object TradeAnalytics extends QueryModule {
     val rep = s.repartition(spark.sparkContext.defaultParallelism)
       .select(col("o_orderkey"), col("c"),
         explode(sequence(lit(1), lit(nPerm))).as("b"))
-      .withColumn("u", expr(
-        "cast(conv(substring(md5(concat(cast(b as string), ':', " +
-          "cast(o_orderkey as string))), 1, 15), 16, 10) as bigint)"))
+      .withColumn("u", md5U60(concat(col("b").cast("string"), lit(":"),
+        col("o_orderkey").cast("string"))))
       .withColumn("bkt", shiftrightunsigned(col("u"), 52))
     // pass 1: per-(b, bucket) histogram (≤ B·256 rows after the
     // map-side partial agg), then the boundary bucket per replicate —
@@ -3760,7 +3753,7 @@ object TradeAnalytics extends QueryModule {
   }
 
   private val randomizationTestSql =
-    """WITH s AS (
+    s"""WITH s AS (
       |  SELECT o_orderkey, o_orderpriority = '1-URGENT' AS is_a,
       |    round(o_totalprice * 100, 0)::BIGINT AS c
       |  FROM orders WHERE o_orderpriority IN ('1-URGENT', '5-LOW')
@@ -3772,11 +3765,7 @@ object TradeAnalytics extends QueryModule {
       |  FROM s
       |), rep AS (
       |  SELECT s.o_orderkey, s.c, g.b,
-      |    list_reduce(list_transform(generate_series(1, 15),
-      |        i -> strpos('0123456789abcdef',
-      |               substring(md5(g.b::VARCHAR || ':' || s.o_orderkey::VARCHAR),
-      |                         i, 1)) - 1),
-      |      (acc, d) -> acc * 16 + d) AS u
+      |    ${md5U60Sql("g.b::VARCHAR || ':' || s.o_orderkey::VARCHAR")} AS u
       |  FROM s CROSS JOIN (SELECT unnest(generate_series(1, 200)) AS b) g
       |), ranked AS (
       |  SELECT b, c,
@@ -3818,9 +3807,7 @@ object TradeAnalytics extends QueryModule {
     * nothing driver-side.
     */
   def conformalIntervals(spark: SparkSession, dir: String): DataFrame = {
-    val bucket = expr(
-      "cast(conv(substring(md5(cast(o_orderkey as string)), 1, 15), 16, 10) " +
-        "as bigint) % 100")
+    val bucket = md5U60(col("o_orderkey").cast("string")) % 100
     val o = Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_orderpriority").as("prio"),
         round(col("o_totalprice") * 100).cast("long").as("yc"),
@@ -3868,18 +3855,12 @@ object TradeAnalytics extends QueryModule {
   }
 
   private val conformalIntervalsSql =
-    """WITH o AS (
+    s"""WITH o AS (
       |  SELECT o_orderkey, o_orderpriority AS prio,
       |    round(o_totalprice * 100)::BIGINT AS yc,
       |    CASE
-      |      WHEN list_reduce(list_transform(generate_series(1, 15),
-      |          i -> strpos('0123456789abcdef',
-      |                 substring(md5(o_orderkey::VARCHAR), i, 1)) - 1),
-      |        (acc, d) -> acc * 16 + d) % 100 < 80 THEN 'train'
-      |      WHEN list_reduce(list_transform(generate_series(1, 15),
-      |          i -> strpos('0123456789abcdef',
-      |                 substring(md5(o_orderkey::VARCHAR), i, 1)) - 1),
-      |        (acc, d) -> acc * 16 + d) % 100 < 90 THEN 'cal'
+      |      WHEN ${md5U60Sql("o_orderkey::VARCHAR")} % 100 < 80 THEN 'train'
+      |      WHEN ${md5U60Sql("o_orderkey::VARCHAR")} % 100 < 90 THEN 'cal'
       |      ELSE 'test' END AS split
       |  FROM orders
       |), model AS (

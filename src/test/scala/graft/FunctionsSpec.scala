@@ -94,6 +94,34 @@ class FunctionsSpec extends SparkSpec {
     assert(math.abs(z01 - z00) < math.abs(zFar - z00))
   }
 
+  test("md5U60 equals SigImpl.hash60 and lies in [0, 2^60)") {
+    import graft.functions.SigImpl
+    import org.apache.spark.unsafe.types.UTF8String
+    import TestSpark.spark.implicits._
+    val keys = Seq("", "0", "42:7", "naïve ключ 数据 🚀", "k" * 1024)
+    val viaLit = spark.range(1)
+      .select(keys.map(k => HashFunctions.md5U60(lit(k))): _*)
+      .head().toSeq.map(_.asInstanceOf[Long])
+    val viaCol = keys.toDF("k").select(HashFunctions.md5U60(col("k")))
+      .collect().map(_.getLong(0)).toSeq
+    assert(viaCol === viaLit)
+    keys.zip(viaLit).foreach { case (k, u) =>
+      assert(u === SigImpl.hash60(UTF8String.fromString(k)), s"key of length ${k.length}")
+      assert(u >= 0L && u < (1L << 60), s"key of length ${k.length}")
+    }
+  }
+
+  test("md5U60Sql is the 15-digit DuckDB fold with lambda names no key can shadow") {
+    val sql = HashFunctions.md5U60Sql("x")
+    assert(sql === "list_reduce(list_transform(generate_series(1, 15), u60_i -> " +
+      "strpos('0123456789abcdef', substring(md5(x), u60_i, 1)) - 1), " +
+      "(u60_acc, u60_d) -> u60_acc * 16 + u60_d)")
+    val params = """(\w+) ->|\((\w+), (\w+)\) ->""".r.findAllMatchIn(sql)
+      .flatMap(_.subgroups).filter(_ != null).toSeq
+    assert(params === Seq("u60_i", "u60_acc", "u60_d"))
+    assert(params.intersect(Seq("i", "j", "k", "acc", "d")).isEmpty)
+  }
+
   test("config-driven extensions path registers the same functions at session build") {
     // a sibling session on the same SparkContext, built WITH extensions
     val prevDefault = SparkSession.getDefaultSession
