@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.functions._
 
 /** Scaling-evidence probe (SCALE.md): runs the flagship corpus
@@ -128,19 +127,22 @@ object ScaleProbe {
       }
     synthTrade(10, tenXDir)
 
-    val shuffleRead = new java.util.concurrent.atomic.AtomicLong()
-    val shuffleWrite = new java.util.concurrent.atomic.AtomicLong()
-    val diskSpill = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-        shuffleRead.addAndGet(s.stageInfo.taskMetrics.shuffleReadMetrics.totalBytesRead)
-        shuffleWrite.addAndGet(s.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-        // r12: the 100× tier's wall-per-GiB doubling (q302/q217) was
-        // adjudicated as sort spill hitting real disk — record it so
-        // the claim is a measured column, not an inference
-        diskSpill.addAndGet(s.stageInfo.taskMetrics.diskBytesSpilled)
-      }
-    })
+    // the min-wall of `samples` measured runs of `body`, each from an
+    // empty cache
+    def best[T](samples: Int)(body: => T): (T, StageLedger.Run) =
+      (1 to samples).map { _ =>
+        operators.ScaledWindows.release()
+        spark.catalog.clearCache()
+        StageLedger.measure(spark.sparkContext)(body)
+      }.minBy(_._2.wallS)
+    def wire(r: StageLedger.Run): String =
+      f"shuffle_read=${r.shuffleReadBytes / 1048576.0}%8.2f MiB " +
+        f"shuffle_write=${r.shuffleWriteBytes / 1048576.0}%8.2f MiB"
+    // r12: the 100× tier's wall-per-GiB doubling (q302/q217) was
+    // adjudicated as sort spill hitting real disk — print it so the
+    // claim is a measured column, not an inference
+    def spill(r: StageLedger.Run): String =
+      if (r.spillBytes > 0) f" disk_spill=${r.spillBytes / 1048576.0}%8.2f MiB" else ""
 
     val probes = Seq(
       "q36_corpus_prep", "q40_minhash_lsh", "q263_dup_span_coverage",
@@ -198,21 +200,9 @@ object ScaleProbe {
     def probe(name: String, label: String, dir: String, samples: Int): Unit = {
       val d = SparkEntry.allDefs.find(_.name == name).get
       if (samples > 1) d.build(spark, dir).count() // warm (codegen + page cache)
-      val times = (1 to samples).map { _ =>
-        operators.ScaledWindows.release()
-        spark.catalog.clearCache()
-        shuffleRead.set(0); shuffleWrite.set(0); diskSpill.set(0)
-        val t0 = System.nanoTime()
-        val n = d.build(spark, dir).count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        // listener events are async; drain before reading counters
-        org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
-        (dt, n, shuffleRead.get(), shuffleWrite.get(), diskSpill.get())
-      }
-      val (dt, n, sr, sw, sp) = times.minBy(_._1)
-      println(f"[scale] $name%-24s $label%-6s rows=$n%-8d wall=$dt%7.3f s " +
-        f"shuffle_read=${sr / 1048576.0}%8.2f MiB shuffle_write=${sw / 1048576.0}%8.2f MiB" +
-        (if (sp > 0) f" disk_spill=${sp / 1048576.0}%8.2f MiB" else ""))
+      val (n, r) = best(samples)(d.build(spark, dir).count())
+      println(f"[scale] $name%-24s $label%-6s rows=$n%-8d wall=${r.wallS}%7.3f s " +
+        wire(r) + spill(r))
     }
     // `skiplow` drops the sf0.1/10× tiers — a 100×-only re-probe after a
     // crash or a fix shouldn't re-pay the lower decades it already has.
@@ -272,19 +262,8 @@ object ScaleProbe {
         val build = operators.TradeAnalytics
           .dimsumNeighbors(spark, dir, budget)
         build.count() // warm
-        val times = (1 to 2).map { _ =>
-          spark.catalog.clearCache()
-          shuffleRead.set(0); shuffleWrite.set(0); diskSpill.set(0)
-          val t0 = System.nanoTime()
-          val n = operators.TradeAnalytics
-            .dimsumNeighbors(spark, dir, budget).count()
-          val dt = (System.nanoTime() - t0) / 1e9
-          org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
-          (dt, n, shuffleRead.get(), shuffleWrite.get())
-        }
-        val (dt, n, sr, sw) = times.minBy(_._1)
-        println(f"[dimsumfb] $label%-6s $mode%-9s rows=$n%-6d wall=$dt%7.3f s " +
-          f"shuffle_read=${sr / 1048576.0}%8.2f MiB shuffle_write=${sw / 1048576.0}%8.2f MiB")
+        val (n, r) = best(2)(operators.TradeAnalytics.dimsumNeighbors(spark, dir, budget).count())
+        println(f"[dimsumfb] $label%-6s $mode%-9s rows=$n%-6d wall=${r.wallS}%7.3f s " + wire(r))
       }
     }
 
@@ -390,47 +369,44 @@ object ScaleProbe {
         } else Seq.empty)
       for ((label, dir) <- capstoneTiers) {
         val outDir = s"/tmp/graft_capstone_$label"
-        spark.catalog.clearCache()
-        shuffleRead.set(0); shuffleWrite.set(0); diskSpill.set(0)
-        val t0 = System.nanoTime()
-        val imm = Clean.cleanImmigration(
-          CapstoneGate.immFromOrders(spark, dir)).cache()
-        val codes = Tables.nation(spark, base).select(
-          col("n_nationkey").cast("double").as("code"),
-          upper(col("n_name")).as("Name"))
-        val visa = StarSchema.visaTypeDim(imm)
-        val fact = StarSchema.immigrationFact(imm, visa)
-        val cal = StarSchema.calendarDim(imm)
-        val country = StarSchema.countryDim(imm, codes,
-          CapstoneGate.tempFromNation(spark, base))
-        // same clustered-write discipline as mergeMonthlyFact /
-        // writeStarSchema (VERDICT r13 #7): partitioned writes are
-        // repartitioned on their partition columns first, so file
-        // count tracks LEAVES, not tasks × leaves.
-        // SPARK_GRAFT_FILES_PER_LEAF sizes the salt: 1 = minimum
-        // files but one write task per leaf (serializes big leaves);
-        // >1 restores write parallelism at files = leaves × k;
-        // 0 (default since r15) = auto-sized from the batch's own
-        // leaf stats (VERDICT r14 #5 — see autoFilesPerLeaf)
-        val fpl = sys.env.getOrElse("SPARK_GRAFT_FILES_PER_LEAF", "0").toInt
-        pipeline.CapstoneEtl.clusterForWrite(
-            fact
-              .withColumn("arrival_year", year(col("arrdate")))
-              .withColumn("arrival_month", month(col("arrdate"))),
-            fpl, "arrival_year", "arrival_month")
-          .write.mode("overwrite")
-          .partitionBy("arrival_year", "arrival_month")
-          .parquet(s"$outDir/immigration_fact")
-        pipeline.CapstoneEtl.clusterForWrite(cal, fpl,
-            "arrival_year", "arrival_month", "arrival_week")
-          .write.mode("overwrite")
-          .partitionBy("arrival_year", "arrival_month", "arrival_week")
-          .parquet(s"$outDir/immigration_calendar_dim")
-        country.write.mode("overwrite").parquet(s"$outDir/country_dim")
-        visa.write.mode("overwrite").parquet(s"$outDir/visa_type_dim")
-        val factRows = spark.read.parquet(s"$outDir/immigration_fact").count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
+        val ((factRows, imm), r) = best(1) {
+          val imm = Clean.cleanImmigration(
+            CapstoneGate.immFromOrders(spark, dir)).cache()
+          val codes = Tables.nation(spark, base).select(
+            col("n_nationkey").cast("double").as("code"),
+            upper(col("n_name")).as("Name"))
+          val visa = StarSchema.visaTypeDim(imm)
+          val fact = StarSchema.immigrationFact(imm, visa)
+          val cal = StarSchema.calendarDim(imm)
+          val country = StarSchema.countryDim(imm, codes,
+            CapstoneGate.tempFromNation(spark, base))
+          // same clustered-write discipline as mergeMonthlyFact /
+          // writeStarSchema (VERDICT r13 #7): partitioned writes are
+          // repartitioned on their partition columns first, so file
+          // count tracks LEAVES, not tasks × leaves.
+          // SPARK_GRAFT_FILES_PER_LEAF sizes the salt: 1 = minimum
+          // files but one write task per leaf (serializes big leaves);
+          // >1 restores write parallelism at files = leaves × k;
+          // 0 (default since r15) = auto-sized from the batch's own
+          // leaf stats (VERDICT r14 #5 — see autoFilesPerLeaf)
+          val fpl = sys.env.getOrElse("SPARK_GRAFT_FILES_PER_LEAF", "0").toInt
+          pipeline.CapstoneEtl.clusterForWrite(
+              fact
+                .withColumn("arrival_year", year(col("arrdate")))
+                .withColumn("arrival_month", month(col("arrdate"))),
+              fpl, "arrival_year", "arrival_month")
+            .write.mode("overwrite")
+            .partitionBy("arrival_year", "arrival_month")
+            .parquet(s"$outDir/immigration_fact")
+          pipeline.CapstoneEtl.clusterForWrite(cal, fpl,
+              "arrival_year", "arrival_month", "arrival_week")
+            .write.mode("overwrite")
+            .partitionBy("arrival_year", "arrival_month", "arrival_week")
+            .parquet(s"$outDir/immigration_calendar_dim")
+          country.write.mode("overwrite").parquet(s"$outDir/country_dim")
+          visa.write.mode("overwrite").parquet(s"$outDir/visa_type_dim")
+          (spark.read.parquet(s"$outDir/immigration_fact").count(), imm)
+        }
         imm.unpersist()
         // small-file audit: data files vs leaf partition directories —
         // bounded means files == leaves at filesPerLeaf = 1
@@ -450,12 +426,8 @@ object ScaleProbe {
         }
         val (factFiles, factLeaves) = audit(s"$outDir/immigration_fact")
         val (calFiles, calLeaves) = audit(s"$outDir/immigration_calendar_dim")
-        println(f"[capstone] $label%-6s fact_rows=$factRows%-9d wall=$dt%7.3f s " +
-          f"shuffle_read=${shuffleRead.get() / 1048576.0}%8.2f MiB " +
-          f"shuffle_write=${shuffleWrite.get() / 1048576.0}%8.2f MiB" +
-          (if (diskSpill.get() > 0)
-            f" disk_spill=${diskSpill.get() / 1048576.0}%8.2f MiB" else "") +
-          f" fact_files=$factFiles%d/$factLeaves%d calendar_files=$calFiles%d/$calLeaves%d leaves")
+        println(f"[capstone] $label%-6s fact_rows=$factRows%-9d wall=${r.wallS}%7.3f s " +
+          wire(r) + spill(r) + f" fact_files=$factFiles%d/$factLeaves%d calendar_files=$calFiles%d/$calLeaves%d leaves")
       }
     }
 
@@ -470,21 +442,16 @@ object ScaleProbe {
       for (name <- Seq("q255_kcore", "q195_connected_components")) {
         val d = SparkEntry.allDefs.find(_.name == name).get
         def runOnce(mode: String): Unit = {
-          operators.ScaledWindows.release()
-          spark.catalog.clearCache()
-          val t0 = System.nanoTime()
-          val res = d.build(spark, tenXDir)
           // coalesce: bit_xor over ZERO rows is NULL (ADVICE r12) — a
           // degenerate result must print rows=0, not MatchError the
           // remaining ckpt runs
-          val row = res
+          val (row, r) = best(1)(d.build(spark, tenXDir)
             .select(xxhash64(struct(col("*"))).as("h"))
             .agg(coalesce(expr("bit_xor(h)"), lit(0L)).as("hs"),
               count(lit(1)).as("n"))
-            .collect()(0)
-          val (h, n) = (row.getLong(0), row.getLong(1))
-          val dt = (System.nanoTime() - t0) / 1e9
-          println(f"[ckpt] $name%-28s $mode%-8s wall=$dt%7.3f s rows=$n%-8d checksum=$h%d")
+            .collect()(0))
+          println(f"[ckpt] $name%-28s $mode%-8s wall=${r.wallS}%7.3f s " +
+            f"rows=${row.getLong(1)}%-8d checksum=${row.getLong(0)}%d")
         }
         d.build(spark, tenXDir).count() // warm (codegen + page cache)
         runOnce("local")

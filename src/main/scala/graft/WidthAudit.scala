@@ -22,14 +22,6 @@ object WidthAudit {
     val spark = GraftSession.local()
     val width = spark.sparkContext.defaultParallelism
 
-    val stages = new java.util.concurrent.ConcurrentHashMap[Int, (Int, Long)]()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        stages.put(s.stageInfo.stageId,
-          (s.stageInfo.numTasks, s.stageInfo.taskMetrics.executorRunTime))
-    })
-
     // JIT/codegen warmup so the first queries' readings aren't inflated
     try { SparkEntry.entry(spark).count() } catch { case _: Throwable => () }
     spark.catalog.clearCache()
@@ -37,20 +29,15 @@ object WidthAudit {
     var flagged = 0
     SparkEntry.allDefs.foreach { d =>
       try {
-        org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
-        stages.clear()
-        d.build(spark, sfDir).count()
-        org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
-        import scala.jdk.CollectionConverters._
-        val byTime = stages.asScala.values.toSeq.sortBy(-_._2)
-        for ((hotTasks, hotMs) <- byTime.headOption) {
-          val narrow = hotMs >= minTaskMs && hotTasks < width / 2
+        val (_, run) = StageLedger.measure(spark.sparkContext)(d.build(spark, sfDir).count())
+        for (hot <- run.hottest) {
+          val narrow = hot.runMs >= minTaskMs && hot.tasks < width / 2
           if (narrow) flagged += 1
           val mark = if (narrow) "NARROW" else "ok"
           // print every row: the full ledger is the artifact, the
           // NARROW rows are the work list
-          println(f"[width] ${d.name}%-36s hot_tasks=$hotTasks%-4d " +
-            f"hot_task_ms=$hotMs%-8d $mark")
+          println(f"[width] ${d.name}%-36s hot_tasks=${hot.tasks}%-4d " +
+            f"hot_task_ms=${hot.runMs}%-8d $mark")
         }
       } catch {
         case e: Throwable =>

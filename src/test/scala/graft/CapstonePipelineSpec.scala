@@ -6,7 +6,6 @@ import scala.jdk.CollectionConverters._
 
 import graft.pipeline._
 import org.apache.spark.graftbridge.ListenerBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -336,21 +335,12 @@ class CapstonePipelineSpec extends SparkSpec {
 
   test("writeStarSchema and checkAll run every job in the caller's job group") {
     val sc = spark.sparkContext
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        groups.add(Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .getOrElse("<none>"))
-    }
     val dir = tempDir("capstone_job_group")
-    sc.addSparkListener(listener)
-    try {
-      // two calls under two groups: a thread that outlived the first call
-      // would carry the first group into the second
-      for (group <- Seq("capstone-spec-a", "capstone-spec-b")) {
-        val t = CapstoneEtl.buildStarSchema(imm, temp, demo, codes)
-        ListenerBridge.drain(sc)
-        groups.clear()
+    // two calls under two groups: a thread that outlived the first call
+    // would carry the first group into the second
+    for (group <- Seq("capstone-spec-a", "capstone-spec-b")) {
+      val t = CapstoneEtl.buildStarSchema(imm, temp, demo, codes)
+      val (_, run) = StageLedger.measure(sc) {
         sc.setJobGroup(group, group, interruptOnCancel = false)
         try {
           CapstoneEtl.writeStarSchema(t, s"$dir/$group")
@@ -359,12 +349,11 @@ class CapstonePipelineSpec extends SparkSpec {
           sc.clearJobGroup()
           t.release()
         }
-        ListenerBridge.drain(sc)
-        val seen = groups.asScala.toSeq
-        assert(seen.size >= 10, seen) // five writes and five aggregations at least
-        assert(seen.distinct === Seq(group))
       }
-    } finally sc.removeSparkListener(listener)
+      val seen = run.jobGroups.map(_.getOrElse("<none>"))
+      assert(seen.size >= 10, seen) // five writes and five aggregations at least
+      assert(seen.distinct === Seq(group))
+    }
   }
 
   test("release() unpersists the immigration and dimension caches") {

@@ -611,33 +611,20 @@ class PlanAuditSpec extends SparkSpec {
     // The distributed-join formulations they replaced ran 98–310 AQE
     // jobs (200 s of pure scheduling for q301); the reshaped queries run
     // ~6. A job count above 12 means the DP went distributed again.
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
+    val fams = Seq[(String, () => DataFrame)](
+      ("q199_markov_stationary",
+        () => operators.EventAnalytics.markovStationary(spark, sfDir)),
+      ("q240_absorption_probs",
+        () => operators.EventAnalytics.absorptionProbs(spark, sfDir)),
+      ("q301_markov_attribution",
+        () => operators.EventAnalytics.markovAttribution(spark, sfDir)),
+      ("q310_spectral_gap",
+        () => operators.EventAnalytics.spectralGap(spark, sfDir)))
+    for ((name, build) <- fams) {
+      val (_, run) = StageLedger.measure(spark.sparkContext)(build().collect())
+      assert(run.jobs <= 12,
+        s"$name ran ${run.jobs} jobs — the metadata DP went distributed again")
     }
-    sc.addSparkListener(listener)
-    try {
-      val fams = Seq[(String, () => DataFrame)](
-        ("q199_markov_stationary",
-          () => operators.EventAnalytics.markovStationary(spark, sfDir)),
-        ("q240_absorption_probs",
-          () => operators.EventAnalytics.absorptionProbs(spark, sfDir)),
-        ("q301_markov_attribution",
-          () => operators.EventAnalytics.markovAttribution(spark, sfDir)),
-        ("q310_spectral_gap",
-          () => operators.EventAnalytics.spectralGap(spark, sfDir)))
-      for ((name, build) <- fams) {
-        org.apache.spark.graftbridge.ListenerBridge.drain(sc)
-        jobs.set(0)
-        build().collect()
-        org.apache.spark.graftbridge.ListenerBridge.drain(sc)
-        assert(jobs.get() <= 12,
-          s"$name ran ${jobs.get()} jobs — the metadata DP went distributed again")
-      }
-    } finally sc.removeSparkListener(listener)
   }
 
   test("block-unrolled recursions stay inside the UnionLoop job budget") {
@@ -651,30 +638,17 @@ class PlanAuditSpec extends SparkSpec {
     // in chain width (k=16 measured slower than k=8 at 20 fewer jobs).
     // A job count past 80 means the unroll silently reverted to
     // month-at-a-time; the oracle cannot see that (output identical).
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
+    val recursions = Seq[(String, () => DataFrame)](
+      ("q226_recursive_cte",
+        () => operators.SqlSurface.recursiveCte(spark, sfDir)),
+      ("q235_holt_smoothing",
+        () => operators.SqlSurface.holtSmoothing(spark, sfDir)))
+    for ((name, build) <- recursions) {
+      val (_, run) = StageLedger.measure(spark.sparkContext)(build().collect())
+      assert(run.jobs <= 80,
+        s"$name ran ${run.jobs} jobs — the block unroll reverted " +
+          "to month-at-a-time iterations")
     }
-    sc.addSparkListener(listener)
-    try {
-      val recursions = Seq[(String, () => DataFrame)](
-        ("q226_recursive_cte",
-          () => operators.SqlSurface.recursiveCte(spark, sfDir)),
-        ("q235_holt_smoothing",
-          () => operators.SqlSurface.holtSmoothing(spark, sfDir)))
-      for ((name, build) <- recursions) {
-        org.apache.spark.graftbridge.ListenerBridge.drain(sc)
-        jobs.set(0)
-        build().collect()
-        org.apache.spark.graftbridge.ListenerBridge.drain(sc)
-        assert(jobs.get() <= 80,
-          s"$name ran ${jobs.get()} jobs — the block unroll reverted " +
-            "to month-at-a-time iterations")
-      }
-    } finally sc.removeSparkListener(listener)
   }
 
   test("expansion-heavy queries run their hot stage wide (class C pin)") {
@@ -690,43 +664,26 @@ class PlanAuditSpec extends SparkSpec {
     // expansion collapses back into the 1-task scan stage, that stage
     // dominates run time and the assertion fails. (The md5 kernels
     // dominate even at sf0.001: ~2M digests vs trivial work elsewhere.)
-    val stages = new java.util.concurrent.ConcurrentHashMap[Int, (Int, Long)]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        stages.put(s.stageInfo.stageId,
-          (s.stageInfo.numTasks, s.stageInfo.taskMetrics.executorRunTime))
+    val width = spark.sparkContext.defaultParallelism
+    val cases = Seq[(String, () => DataFrame)](
+      ("q258_randomization_test",
+        () => operators.TradeAnalytics.randomizationTest(spark, sfDir)),
+      ("q197_lsh_recall_audit",
+        () => operators.Dedup.lshRecallAudit(spark, sfDir)),
+      // r11: the codec synth+decode kernel must not inherit the
+      // documents scan's split count (12x wall at the 10x probe tier
+      // before the pre-synth repartition landed)
+      ("q315_video_decode",
+        () => multimodal.Multimodal.videoDecodeQuery(spark, sfDir)))
+    for ((name, build) <- cases) {
+      val (_, run) = StageLedger.measure(spark.sparkContext)(build().collect())
+      val hot = run.hottest.getOrElse(fail(s"$name: no stages observed"))
+      assert(hot.tasks >= width,
+        s"$name: hottest stage (${hot.runMs} ms of task time) ran with only " +
+          s"${hot.tasks} task(s) — the pre-expansion repartition is gone " +
+          s"and the expensive map stage serialized (expected >= $width)")
+      spark.catalog.clearCache()
     }
-    val sc = spark.sparkContext
-    val width = sc.defaultParallelism
-    sc.addSparkListener(listener)
-    try {
-      val cases = Seq[(String, () => DataFrame)](
-        ("q258_randomization_test",
-          () => operators.TradeAnalytics.randomizationTest(spark, sfDir)),
-        ("q197_lsh_recall_audit",
-          () => operators.Dedup.lshRecallAudit(spark, sfDir)),
-        // r11: the codec synth+decode kernel must not inherit the
-        // documents scan's split count (12x wall at the 10x probe tier
-        // before the pre-synth repartition landed)
-        ("q315_video_decode",
-          () => multimodal.Multimodal.videoDecodeQuery(spark, sfDir)))
-      for ((name, build) <- cases) {
-        org.apache.spark.graftbridge.ListenerBridge.drain(sc)
-        stages.clear()
-        build().collect()
-        org.apache.spark.graftbridge.ListenerBridge.drain(sc)
-        import scala.jdk.CollectionConverters._
-        val byTime = stages.asScala.values.toSeq.sortBy(-_._2)
-        assert(byTime.nonEmpty, s"$name: no stages observed")
-        val (hotTasks, hotMs) = byTime.head
-        assert(hotTasks >= width,
-          s"$name: hottest stage ($hotMs ms of task time) ran with only " +
-            s"$hotTasks task(s) — the pre-expansion repartition is gone " +
-            s"and the expensive map stage serialized (expected >= $width)")
-        spark.catalog.clearCache()
-      }
-    } finally sc.removeSparkListener(listener)
   }
 
   test("estimate-cliff broadcast hints stay in the q40/q43 candidate joins") {

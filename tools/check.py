@@ -8,8 +8,12 @@ Runs after `sbt "runMain graft.Verify <sfDir> <outDir>"`:
   3. sorts columns by name, sorts rows, compares cell-by-cell
 
 Usage: python3 tools/check.py <sfDir> <outDir> [query ...]
+
+stdout carries one OK/FAIL line per query and the summary. stderr carries
+the seconds each query spent reading its output, running its oracle SQL
+and comparing, then the ten slowest queries.
 """
-import sys, json, glob, os
+import sys, json, glob, os, time
 import duckdb
 import pandas as pd
 import numpy as np
@@ -76,6 +80,23 @@ def _first_diff(aa, bb):
     return f"row {i}: mine={aa[i]!r} oracle={bb[i]!r}"
 
 
+PHASES = ("read", "oracle", "compare")
+
+
+def report_timings(timings):
+    """Per-query phase seconds, their totals and the ten slowest, to stderr."""
+    def line(label, t):
+        cols = " ".join(f"{p}={t.get(p, 0.0):8.3f}" for p in PHASES)
+        return f"[timing] {label:<40} {cols} total={sum(t.values()):8.3f}"
+    for name in sorted(timings):
+        print(line(name, timings[name]), file=sys.stderr)
+    totals = {p: sum(t.get(p, 0.0) for t in timings.values()) for p in PHASES}
+    print(line(f"ALL ({len(timings)} queries)", totals), file=sys.stderr)
+    print("[timing] ten slowest:", file=sys.stderr)
+    for name in sorted(timings, key=lambda n: -sum(timings[n].values()))[:10]:
+        print(line(name, timings[name]), file=sys.stderr)
+
+
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
     only = set(sys.argv[3:])
@@ -100,6 +121,7 @@ def main():
         print("WARNING: no errors.json in outDir (stale Verify?)", file=sys.stderr)
     names = sorted(os.path.basename(p) for p in glob.glob(f"{out_dir}/*")
                    if os.path.isdir(p))
+    timings = {}  # name -> {phase: seconds}
     for name in names:
         if only and name not in only:
             continue
@@ -107,23 +129,34 @@ def main():
             # already marked FAIL from errors.json — a stale output dir
             # from a previous run must not overwrite the failure row
             continue
+        t = timings[name] = {}
+        t0 = time.perf_counter()
         try:
             mine = pd.read_parquet(f"{out_dir}/{name}")
         except Exception as e:
             results[name] = f"FAIL read-output: {e}"
             continue
+        finally:
+            t["read"] = time.perf_counter() - t0
         if name not in oracle_sql:
             results[name] = f"rows-only: {len(mine)} rows" + (" FAIL(empty)" if len(mine) == 0 else " OK")
             continue
+        t0 = time.perf_counter()
         try:
             oracle = con.execute(oracle_sql[name]).df()
         except Exception as e:
             results[name] = f"FAIL oracle-sql: {e}"
             continue
+        finally:
+            t["oracle"] = time.perf_counter() - t0
+        t0 = time.perf_counter()
         try:
             results[name] = compare(name, mine, oracle)
         except Exception as e:
             results[name] = f"FAIL compare: {e}"
+        finally:
+            t["compare"] = time.perf_counter() - t0
+    report_timings(timings)
     w = max(len(n) for n in results) if results else 0
     nfail = 0
     for n in sorted(results):
