@@ -27,8 +27,11 @@ object BenchOne {
       StageLedger.measure(spark.sparkContext)(d.build(spark, sfDir).count())._2
     }
     val best = runs.minBy(_.wallS)
+    // compiles: generated classes the rep did not find in Spark's codegen
+    // cache (JVM-wide counters, see StageLedger.Run)
     println(f"[bench-one] $name reps=$reps min=${best.wallS}%.3f " +
       f"jobs=${best.jobs} stages=${best.stages.size} task_time=${best.runMs / 1000.0}%.2f s " +
+      f"compiles=${best.compiles} compile_ms=${best.compileMs}%.1f " +
       runs.map(r => f"${r.wallS}%.3f").mkString("samples=[", ",", "]"))
     // the best rep's stages: where its task time went (call site and
     // width), the first thing to read when wall >> task/width

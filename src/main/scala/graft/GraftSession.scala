@@ -78,7 +78,16 @@ object GraftSession {
     // the dominant driver-heap leak
     "spark.sql.ui.retainedExecutions" -> "20",
     "spark.ui.retainedJobs" -> "100",
-    "spark.ui.retainedStages" -> "100")
+    "spark.ui.retainedStages" -> "100",
+    // Spark's cache of generated classes is an LRU of 100 entries by
+    // default, keyed by classloader and source, so a whole-stage source
+    // takes two entries: the driver compiles it when the plan executes
+    // and the local executor again under its task classloader. One pass
+    // of perfbench's queries_heavy (six queries) compiles 276 classes, one
+    // entry each, so at 100 its timed second pass compiled 313 classes
+    // again and the JIT re-warmed them. 1000 is 3.6x that working set. A
+    // static conf: the cache is sized once per JVM, at its first use.
+    "spark.sql.codegen.cache.maxEntries" -> "1000")
 
   /** A session on `local[cpus]` with `cpus` shuffle partitions, or on
     * `master` when one is given (a deployment's `SPARK_MASTER`).

@@ -32,6 +32,9 @@ import org.apache.spark.sql.functions._
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // the base tier's label in the output lines and paths: the corpus
+    // directory's name, e.g. sf0.01 for /root/testdata/sf0.01
+    val baseTier = java.nio.file.Paths.get(base).getFileName.toString
     val tenXDir = "/tmp/graft_scale_10x"
     val cpus = GraftSession.cpus
     val spark = GraftSession.local(cpus)
@@ -208,7 +211,7 @@ object ScaleProbe {
     // crash or a fix shouldn't re-pay the lower decades it already has.
     if (!args.contains("skiplow"))
       for (name <- probes if wanted(name);
-           (label, dir) <- Seq(("sf0.1", base), ("10x", tenXDir)))
+           (label, dir) <- Seq((baseTier, base), ("10x", tenXDir)))
         probe(name, label, dir, samples = 2)
 
     // `dimsum` mode (r12): the q322-vs-q204 dimension-independence
@@ -246,7 +249,7 @@ object ScaleProbe {
              "q217_hard_negatives", "q324_dimsum_hard_negatives",
              "q326_hybrid_neighbors")
              if wanted(name);
-           (label, dir) <- Seq(("sf0.1", base), ("10xFC", fcDir)))
+           (label, dir) <- Seq((baseTier, base), ("10xFC", fcDir)))
         probe(name, label, dir, samples = 2)
     }
 
@@ -255,7 +258,7 @@ object ScaleProbe {
     // (budget 0 forces the shuffle-join fallback the budget guard
     // degrades to) vs the hinted default, same data, back to back.
     if (args.contains("dimsumfallback")) {
-      for ((label, dir) <- Seq(("sf0.1", base), ("10x", tenXDir));
+      for ((label, dir) <- Seq((baseTier, base), ("10x", tenXDir));
            (mode, budget) <- Seq(
              ("hinted", operators.TradeAnalytics.DimsumItemBudget),
              ("fallback", 0L))) {
@@ -339,7 +342,7 @@ object ScaleProbe {
     // (2M budget) and how big the verify subgraph is.
     if (args.contains("dimsumdiag")) {
       import operators.TradeAnalytics._
-      for ((label, dir) <- Seq(("sf0.1", base), ("10x", tenXDir),
+      for ((label, dir) <- Seq((baseTier, base), ("10x", tenXDir),
           ("10xFC", "/tmp/graft_scale_10xfc"))
           if new java.io.File(s"$dir/lineitem.parquet").exists()) {
         val df = dimsumCandidateDiag(spark, dir)
@@ -362,7 +365,7 @@ object ScaleProbe {
       import pipeline.{CapstoneGate, Clean, StarSchema}
       // with `100` also on the args, the deliverable gets its third
       // decade from the spread trade synth (15M orders)
-      val capstoneTiers = Seq(("sf0.1", base), ("10x", tenXDir)) ++
+      val capstoneTiers = Seq((baseTier, base), ("10x", tenXDir)) ++
         (if (args.contains("100")) {
           synthTrade(100, "/tmp/graft_scale_100x", spread = true)
           Seq(("100x", "/tmp/graft_scale_100x"))
@@ -507,7 +510,7 @@ object ScaleProbe {
           }
         }
       val ev = Tables.events(spark, base)
-      stage("sf0.1", ev, "/tmp/graft_stream_1x")
+      stage(baseTier, ev, "/tmp/graft_stream_1x")
       val ev10 = ev
         .select(col("*"), explode(sequence(lit(0), lit(9))).as("r"))
         .select((col("event_id") * 10 + col("r")).as("event_id"), col("ts"),
@@ -527,7 +530,7 @@ object ScaleProbe {
       // results; the row to read is peak_state_mib (now native/off-heap
       // accounting) and the wall delta vs the default provider.
       val providerTiers =
-        Seq(("sf0.1", "/tmp/graft_stream_1x", false),
+        Seq((baseTier, "/tmp/graft_stream_1x", false),
           ("10x", "/tmp/graft_stream_10x", false)) ++
         (if (args.contains("rocksdb"))
           Seq(("10x-rocks", "/tmp/graft_stream_10x", true)) else Seq.empty)

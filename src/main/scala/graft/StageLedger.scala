@@ -6,7 +6,9 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.SparkContext
 import org.apache.spark.graftbridge.ListenerBridge
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** The one stage-metrics collector of the tools (`BenchOne`,
   * `WidthAudit`, `ScaleProbe`) and the budget specs. `Bench`'s spill
@@ -22,9 +24,14 @@ object StageLedger {
       shuffleReadBytes: Long, shuffleWriteBytes: Long, spillBytes: Long)
 
   /** One measured run: wall time, each job's group in start order (`None`
-    * outside a group), and the stages in completion order.
+    * outside a group), the stages in completion order, and the generated
+    * classes Janino compiled (`compiles`, in `compileMs`). The compile
+    * counters are JVM-wide: they count every session's compiles in the
+    * JVM while `body` ran, on the driver and the local executor alike; a
+    * class found in Spark's codegen cache counts none.
     */
-  final case class Run(wallS: Double, jobGroups: Seq[Option[String]], stages: Seq[Stage]) {
+  final case class Run(wallS: Double, jobGroups: Seq[Option[String]], stages: Seq[Stage],
+      compiles: Long, compileMs: Double) {
     def jobs: Int = jobGroups.size
     def runMs: Long = stages.map(_.runMs).sum
     def shuffleReadBytes: Long = stages.map(_.shuffleReadBytes).sum
@@ -54,11 +61,21 @@ object StageLedger {
     ListenerBridge.drain(sc)
     sc.addSparkListener(listener)
     try {
+      val (compiles0, compileNs0) = compileCounters()
       val t0 = System.nanoTime()
       val result = body
       val wallS = (System.nanoTime() - t0) / 1e9
+      val (compiles1, compileNs1) = compileCounters()
       ListenerBridge.drain(sc)
-      (result, Run(wallS, jobGroups.asScala.toSeq, stages.asScala.toSeq))
+      (result, Run(wallS, jobGroups.asScala.toSeq, stages.asScala.toSeq,
+        compiles1 - compiles0, (compileNs1 - compileNs0) / 1e6))
     } finally sc.removeSparkListener(listener)
   }
+
+  /** Codegen compiles so far and their Janino time in nanoseconds: each
+    * compile updates the compile-time histogram once and adds its
+    * duration to `CodeGenerator.compileTime`.
+    */
+  private def compileCounters(): (Long, Long) =
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
 }

@@ -15,4 +15,16 @@ class GraftSessionSpec extends SparkSpec {
     assert(built.get("spark.master") === "local[4]")
     assert(built.get("spark.sql.shuffle.partitions") === "4")
   }
+
+  test("the codegen cache keeps more generated classes than Spark's default 100") {
+    // each projection is a new source; its classes take at least two
+    // cache entries (see GraftSession.engineConf), so a 100-entry cache
+    // has evicted the first 20 by the time the last one runs
+    def project(i: Int) = spark.range(10).selectExpr(s"id * $i + 1").collect()
+    val sc = spark.sparkContext
+    val (_, first) = StageLedger.measure(sc)((1 to 150).foreach(project))
+    assert(first.compiles >= 150)
+    val (_, rerun) = StageLedger.measure(sc)((1 to 20).foreach(project))
+    assert(rerun.compiles === 0)
+  }
 }

@@ -34,7 +34,7 @@ class StageLedgerSpec extends SparkSpec {
 
   test("hottest is the stage with the most executor run time") {
     def stage(id: Int, runMs: Long) = StageLedger.Stage(id, s"s$id", 1, runMs, 0, 0, 0)
-    val run = StageLedger.Run(1.0, Nil, Seq(stage(1, 5), stage(2, 50), stage(3, 7)))
+    val run = StageLedger.Run(1.0, Nil, Seq(stage(1, 5), stage(2, 50), stage(3, 7)), 0, 0)
     assert(run.hottest.map(_.id) === Some(2))
     assert(run.copy(stages = Nil).hottest === None)
     // measured: four sleeping map tasks outweigh the two-task reduce
@@ -53,5 +53,16 @@ class StageLedgerSpec extends SparkSpec {
     val (_, run) = StageLedger.measure(sc)(count(2))
     assert(run.jobs === 1)
     assert(run.stages.map(_.tasks) === Seq(2))
+  }
+
+  test("a new expression compiles its generated code once; its rerun compiles none") {
+    // a literal no other query in the JVM uses, so its source is new
+    def q = spark.range(10).selectExpr("id * 982451653 + 17").collect()
+    val (_, first) = StageLedger.measure(sc)(q)
+    assert(first.compiles >= 1)
+    assert(first.compileMs > 0)
+    val (_, rerun) = StageLedger.measure(sc)(q)
+    assert(rerun.compiles === 0)
+    assert(rerun.compileMs === 0)
   }
 }
