@@ -1,523 +1,282 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult.{TypeCheckFailure, TypeCheckSuccess}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.array.ByteArrayMethods
 
-object PairExpandImpl {
+/** A posting list sorted by id: `ids` ascending and, for an
+  * `array<struct<id: bigint, payload>>` input, each row's payload
+  * (widened to long) moved along with its id; `payload` is null for a
+  * bare `array<bigint>`.
+  */
+final class Postings(val ids: Array[Long], val payload: Array[Long])
 
-  /** Expand a posting list of (doc_id, nsh) structs into its C(n,2)
-    * ordered pairs, sorted so doc_a < doc_b — the per-shingle pair
-    * generation of the exact-Jaccard inverted index
-    * (graft.operators.TextAnalysis.jaccardPairsOn). One pass, no
-    * interpreted lambda per element: the expression-tree formulation
-    * (transform+slice+flatten) walks Σ df² elements through interpreted
-    * HOFs; this kernel emits them straight into the output array.
-    */
-  def pairExpand(arr: ArrayData): ArrayData = {
+object Postings {
+
+  /** Reads a posting list and sorts it by id. `payload` is the struct's
+    * second field type (int or bigint), None for a bare id list. */
+  def read(arr: ArrayData, payload: Option[DataType]): Postings = {
     val n = arr.numElements()
-    val ids = new Array[Long](n)
-    val nshs = new Array[Int](n)
-    var i = 0
-    while (i < n) {
-      val s = arr.getStruct(i, 2)
-      ids(i) = s.getLong(0)
-      nshs(i) = s.getInt(1)
-      i += 1
-    }
-    // insertion sort by doc_id — posting lists are small (df per shingle)
-    i = 1
-    while (i < n) {
-      val id = ids(i); val ns = nshs(i)
-      var j = i - 1
-      while (j >= 0 && ids(j) > id) {
-        ids(j + 1) = ids(j); nshs(j + 1) = nshs(j); j -= 1
+    val ids = if (payload.isEmpty) arr.toLongArray() else new Array[Long](n)
+    val pay = payload.map(_ => new Array[Long](n)).orNull
+    if (pay != null) {
+      val wide = payload.contains(LongType)
+      var i = 0
+      while (i < n) {
+        val s = arr.getStruct(i, 2)
+        ids(i) = s.getLong(0)
+        pay(i) = if (wide) s.getLong(1) else s.getInt(1)
+        i += 1
       }
-      ids(j + 1) = id; nshs(j + 1) = ns
-      i += 1
     }
-    val out = new Array[Any](n * (n - 1) / 2)
-    var k = 0
-    i = 0
-    while (i < n) {
-      var j = i + 1
-      while (j < n) {
-        out(k) = new GenericInternalRow(
-          Array[Any](ids(i), nshs(i), ids(j), nshs(j)))
-        k += 1
-        j += 1
+    sort(ids, pay)
+    new Postings(ids, pay)
+  }
+
+  /** Heapsort of `ids`, carrying `payload` (if any) along: in place and
+    * O(n log n) whatever the list's length or order. */
+  private def sort(ids: Array[Long], payload: Array[Long]): Unit = {
+    def swap(a: Int, b: Int): Unit = {
+      val t = ids(a); ids(a) = ids(b); ids(b) = t
+      if (payload != null) {
+        val p = payload(a); payload(a) = payload(b); payload(b) = p
       }
-      i += 1
     }
-    new GenericArrayData(out)
+    def siftDown(start: Int, end: Int): Unit = {
+      var root = start
+      var child = 2 * root + 1
+      while (child < end) {
+        if (child + 1 < end && ids(child + 1) > ids(child)) child += 1
+        if (ids(root) >= ids(child)) child = end
+        else { swap(root, child); root = child; child = 2 * root + 1 }
+      }
+    }
+    val n = ids.length
+    var i = n / 2 - 1
+    while (i >= 0) { siftDown(i, n); i -= 1 }
+    var end = n - 1
+    while (end > 0) { swap(0, end); siftDown(0, end); end -= 1 }
   }
 }
 
-/** `pair_expand(array<struct<doc_id:long, nsh:int>>)` →
-  * `array<struct<doc_a, nsh_a, doc_b, nsh_b>>`, doc_a < doc_b.
+/** Receives the `k`-th canonical pair: rows `i < j` of a sorted list. */
+trait PairSink { def apply(k: Int, i: Int, j: Int): Unit }
+
+/** The canonical pairs of a sorted list of `n` rows: every `i < j`, or,
+  * when `anchorAt` (the ascending positions of the anchor rows) is
+  * given, only the pairs with an anchor endpoint. An anchor row pairs
+  * with every later row, any other row with the later anchors, so each
+  * pair comes once, in (i, j) order. The count is checked on
+  * construction, so a caller sizes its output from `count`.
   */
-case class PairExpand(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("doc_a", LongType, nullable = false),
-    StructField("nsh_a", IntegerType, nullable = false),
-    StructField("doc_b", LongType, nullable = false),
-    StructField("nsh_b", IntegerType, nullable = false))), containsNull = false)
-  override def prettyName: String = "pair_expand"
+final class CanonicalPairs(kernel: String, n: Int, anchorAt: Array[Int]) {
+  val count: Int =
+    CanonicalPairs.count(kernel, n, if (anchorAt == null) n else anchorAt.length)
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StructType(fields), _)
-          if fields.length == 2 && fields(0).dataType == LongType &&
-            fields(1).dataType == IntegerType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"pair_expand expects array<struct<bigint, int>>, got ${other.sql}")
+  def foreach(sink: PairSink): Unit = {
+    var k = 0
+    var next = 0 // the first anchor position at or after row i
+    var i = 0
+    while (i < n) {
+      if (anchorAt == null || (next < anchorAt.length && anchorAt(next) == i)) {
+        if (anchorAt != null) next += 1
+        var j = i + 1
+        while (j < n) { sink(k, i, j); k += 1; j += 1 }
+      } else {
+        var q = next
+        while (q < anchorAt.length) { sink(k, i, anchorAt(q)); k += 1; q += 1 }
+      }
+      i += 1
     }
+  }
+}
 
-  override protected def nullSafeEval(input: Any): Any =
-    PairExpandImpl.pairExpand(input.asInstanceOf[ArrayData])
+object CanonicalPairs {
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.PairExpandImpl.pairExpand($c)")
+  /** The most elements one JVM array holds. */
+  val MaxPairs: Long = ByteArrayMethods.MAX_ROUNDED_ARRAY_LENGTH.toLong
 
-  override protected def withNewChildInternal(newChild: Expression): PairExpand =
+  /** The pairs of `n` rows with at least one of `anchors` anchor rows as
+    * an endpoint, C(n, 2) − C(n − anchors, 2) (all of them when
+    * `anchors = n`), counted in Long: in Int, n(n − 1) overflows from
+    * n = 46,342. Throws when they do not fit in one array. */
+  def count(kernel: String, n: Int, anchors: Int): Int = {
+    val rest = (n - anchors).toLong
+    val c = n.toLong * (n - 1) / 2 - rest * (rest - 1) / 2
+    if (c > MaxPairs)
+      throw new IllegalArgumentException(
+        s"$kernel: a list of n = $n rows has $c pairs, more than one array holds ($MaxPairs)")
+    c.toInt
+  }
+}
+
+/** The shell of the posting-list kernels: one `array<bigint>` or
+  * `array<struct<bigint, payload>>` argument, type-checked here, read
+  * and sorted by [[Postings.read]], and run from generated code through
+  * a reference to the expression itself.
+  */
+abstract class PostingKernel extends UnaryExpression {
+
+  /** The struct's payload type, None for a bare `array<bigint>`. */
+  def payloadType: Option[DataType]
+
+  protected def expand(postings: Postings): ArrayData
+
+  final def run(arr: ArrayData): ArrayData = expand(Postings.read(arr, payloadType))
+
+  override def checkInputDataTypes(): TypeCheckResult = (child.dataType, payloadType) match {
+    case (ArrayType(LongType, _), None) => TypeCheckSuccess
+    case (ArrayType(StructType(Array(id, p)), _), Some(t))
+        if id.dataType == LongType && p.dataType == t => TypeCheckSuccess
+    case (other, _) =>
+      val want = payloadType.fold("array<bigint>")(t => s"array<struct<bigint, ${t.simpleString}>>")
+      TypeCheckFailure(s"$prettyName expects $want, got ${other.sql}")
+  }
+
+  override protected def nullSafeEval(input: Any): Any = run(input.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val kernel = ctx.addReferenceObj("kernel", this)
+    defineCodeGen(ctx, ev, c => s"$kernel.run($c)")
+  }
+}
+
+object PostingKernel {
+  /** `array<struct<…>>` of non-null fields, the pair kernels' output. */
+  def structArray(fields: (String, DataType)*): DataType =
+    ArrayType(StructType(fields.map { case (name, t) =>
+      StructField(name, t, nullable = false) }), containsNull = false)
+}
+
+/** How [[PairExpansion]] emits a pair (a < b): as the struct
+  * (doc_a, nsh_a, doc_b, nsh_b) of a `(doc_id, nsh)` posting list, as
+  * the id struct (id_a, id_b), or packed into the one long
+  * (id_a << 32) | id_b. Grouping on the packed key is bijective with
+  * grouping on (a, b) exactly while every id fits an unsigned 32-bit
+  * slot, so callers guard on the id range (and fall back to `Ids` past
+  * it); the kernel re-checks and throws rather than corrupt a pair.
+  */
+sealed abstract class PairEncoding(val name: String,
+    val payload: Option[DataType], val dataType: DataType) extends Serializable
+
+object PairEncoding {
+  import PostingKernel.structArray
+  case object Payload extends PairEncoding("pair_expand", Some(IntegerType),
+    structArray("doc_a" -> LongType, "nsh_a" -> IntegerType,
+      "doc_b" -> LongType, "nsh_b" -> IntegerType))
+  case object Ids extends PairEncoding("pair_expand_ids", None,
+    structArray("id_a" -> LongType, "id_b" -> LongType))
+  case object Packed extends PairEncoding("pair_expand_packed_ids", None,
+    ArrayType(LongType, containsNull = false))
+}
+
+/** The pair-expansion kernels: `pair_expand`, `pair_expand_ids`,
+  * `pair_expand_packed_ids` and, with anchors, `anchor_pair_expand` and
+  * `anchor_pair_expand_ids`. A posting list expands into its canonical
+  * pairs in one pass, straight into the output array: the per-key pair
+  * generation of the exact-Jaccard inverted index, the LSH buckets and
+  * the co-purchase baskets of the item-similarity queries.
+  *
+  * `anchors = None` emits all C(n, 2) pairs. `Some(a)` emits only the
+  * pairs with an endpoint in `a` (driver-supplied, human-scale), the
+  * subset a downstream anchor-incidence filter would keep, without
+  * building the full expansion first: O(n log n + n·|a ∩ list| + emits)
+  * per list. `Some(Seq.empty)` emits nothing.
+  */
+case class PairExpansion(child: Expression, encoding: PairEncoding,
+    anchors: Option[Seq[Long]]) extends PostingKernel {
+  @transient private lazy val sortedAnchors: Array[Long] =
+    anchors.map(_.toArray.sorted).orNull
+
+  override def prettyName: String = anchors.fold("")(_ => "anchor_") + encoding.name
+  override def dataType: DataType = encoding.dataType
+  override def payloadType: Option[DataType] = encoding.payload
+  // plans print the child, then any anchors
+  override protected def stringArgs: Iterator[Any] = Iterator(child) ++ anchors
+
+  protected def expand(postings: Postings): ArrayData = {
+    val ids = postings.ids
+    val pay = postings.payload
+    val n = ids.length
+    val anchorAt = if (sortedAnchors == null) null else
+      Array.range(0, n).filter(i => java.util.Arrays.binarySearch(sortedAnchors, ids(i)) >= 0)
+    val pairs = new CanonicalPairs(prettyName, n, anchorAt)
+    if (encoding == PairEncoding.Packed) {
+      if (n > 0 && (ids(0) < 0L || ids(n - 1) >= (1L << 32)))
+        throw new IllegalArgumentException(
+          s"$prettyName: id out of [0, 2^32): ${ids(0)}..${ids(n - 1)}")
+      val out = new Array[Long](pairs.count)
+      pairs.foreach((k, i, j) => out(k) = (ids(i) << 32) | ids(j))
+      UnsafeArrayData.fromPrimitiveArray(out)
+    } else {
+      val out = new Array[Any](pairs.count)
+      pairs.foreach((k, i, j) => out(k) = new GenericInternalRow(
+        if (pay == null) Array[Any](ids(i), ids(j))
+        else Array[Any](ids(i), pay(i).toInt, ids(j), pay(j).toInt)))
+      new GenericArrayData(out)
+    }
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): PairExpansion =
     copy(child = newChild)
 }
 
-object PairExpandImplSim {
+/** `simhash_bucket_pairs(array<struct<id:long, sim:long>>)` →
+  * `array<struct<doc_a, doc_b, hamming:int, first_band:int>>`, the
+  * pigeonhole-banding sibling of [[PairExpansion]]: one (band, band-key)
+  * bucket's (id, signature) list expands into its qualifying pairs in a
+  * single pass. Per canonical pair (doc_a < doc_b): XOR the signatures,
+  * popcount ≤ maxHamming gates the emit, and the FIRST band where the
+  * signatures agree rides along so the plan can keep each pair exactly
+  * once (filter first_band = this bucket's band) without a distinct().
+  */
+case class SimhashBucketPairs(child: Expression, bitsPerBand: Int,
+    nBands: Int, maxHamming: Int) extends PostingKernel {
+  override def dataType: DataType = PostingKernel.structArray(
+    "doc_a" -> LongType, "doc_b" -> LongType,
+    "hamming" -> IntegerType, "first_band" -> IntegerType)
+  override def prettyName: String = "simhash_bucket_pairs"
+  override def payloadType: Option[DataType] = Some(LongType)
 
-  /** SimHash bucket pair generation — the grouped-posting sibling of
-    * [[PairExpandImpl.pairExpand]] for the pigeonhole-banding scheme:
-    * one (band, band-key) bucket's (id, signature) list expands into
-    * its qualifying pairs in a single kernel pass. Per ordered pair
-    * (id_a < id_b): XOR the signatures, popcount ≤ maxHamming gates
-    * the emit, and the FIRST band where the signatures agree rides
-    * along so the plan can keep each pair exactly once (filter
-    * first_band = this bucket's band) without a distinct() shuffle.
-    */
-  def simhashBucketPairs(arr: ArrayData, bitsPerBand: Int, nBands: Int,
-      maxHamming: Int): ArrayData = {
-    val n = arr.numElements()
-    val ids = new Array[Long](n)
-    val sims = new Array[Long](n)
-    var i = 0
-    while (i < n) {
-      val s = arr.getStruct(i, 2)
-      ids(i) = s.getLong(0)
-      sims(i) = s.getLong(1)
-      i += 1
-    }
-    // insertion sort by id — buckets are small by banding design
-    i = 1
-    while (i < n) {
-      val id = ids(i); val sm = sims(i)
-      var j = i - 1
-      while (j >= 0 && ids(j) > id) {
-        ids(j + 1) = ids(j); sims(j + 1) = sims(j); j -= 1
-      }
-      ids(j + 1) = id; sims(j + 1) = sm
-      i += 1
-    }
+  protected def expand(postings: Postings): ArrayData = {
+    val ids = postings.ids
+    val sims = postings.payload
     val mask = (1L << bitsPerBand) - 1
     val out = scala.collection.mutable.ArrayBuffer.empty[Any]
-    i = 0
-    while (i < n) {
-      var j = i + 1
-      while (j < n) {
-        val x = sims(i) ^ sims(j)
-        if (java.lang.Long.bitCount(x) <= maxHamming) {
-          var fb = 0
-          while (fb < nBands && ((x >>> (fb * bitsPerBand)) & mask) != 0L) fb += 1
-          out += new GenericInternalRow(Array[Any](
-            ids(i), ids(j), java.lang.Long.bitCount(x), fb))
-        }
-        j += 1
+    new CanonicalPairs(prettyName, ids.length, null).foreach { (_, i, j) =>
+      val x = sims(i) ^ sims(j)
+      val hamming = java.lang.Long.bitCount(x)
+      if (hamming <= maxHamming) {
+        var fb = 0
+        while (fb < nBands && ((x >>> (fb * bitsPerBand)) & mask) != 0L) fb += 1
+        out += new GenericInternalRow(Array[Any](ids(i), ids(j), hamming, fb))
       }
-      i += 1
     }
     new GenericArrayData(out.toArray)
   }
-}
-
-/** `simhash_bucket_pairs(array<struct<id:long, sim:long>>)` →
-  * `array<struct<doc_a, doc_b, hamming:int, first_band:int>>`,
-  * doc_a < doc_b, hamming ≤ maxHamming.
-  */
-case class SimhashBucketPairs(child: Expression, bitsPerBand: Int,
-    nBands: Int, maxHamming: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("doc_a", LongType, nullable = false),
-    StructField("doc_b", LongType, nullable = false),
-    StructField("hamming", IntegerType, nullable = false),
-    StructField("first_band", IntegerType, nullable = false))),
-    containsNull = false)
-  override def prettyName: String = "simhash_bucket_pairs"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StructType(fields), _)
-          if fields.length == 2 && fields(0).dataType == LongType &&
-            fields(1).dataType == LongType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"simhash_bucket_pairs expects array<struct<bigint, bigint>>, got ${other.sql}")
-    }
-
-  override protected def nullSafeEval(input: Any): Any =
-    PairExpandImplSim.simhashBucketPairs(
-      input.asInstanceOf[ArrayData], bitsPerBand, nBands, maxHamming)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.PairExpandImplSim.simhashBucketPairs($c, $bitsPerBand, $nBands, $maxHamming)")
 
   override protected def withNewChildInternal(newChild: Expression): SimhashBucketPairs =
     copy(child = newChild)
 }
 
-object PairExpandImplIds {
-
-  /** C(n,2) ordered id pairs of a bucket's member list — the bare-id
-    * variant of [[PairExpandImpl.pairExpand]] for LSH candidate
-    * generation where nothing but the ids need to ride.
-    */
-  def pairExpandIds(arr: ArrayData): ArrayData = {
-    val n = arr.numElements()
-    val ids = arr.toLongArray()
-    java.util.Arrays.sort(ids)
-    val out = new Array[Any](n * (n - 1) / 2)
-    var k = 0
-    var i = 0
-    while (i < n) {
-      var j = i + 1
-      while (j < n) {
-        out(k) = new GenericInternalRow(Array[Any](ids(i), ids(j)))
-        k += 1
-        j += 1
-      }
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-}
-
-/** `pair_expand_ids(array<long>)` → `array<struct<id_a, id_b>>`, id_a < id_b. */
-case class PairExpandIds(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("id_a", LongType, nullable = false),
-    StructField("id_b", LongType, nullable = false))), containsNull = false)
-  override def prettyName: String = "pair_expand_ids"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"pair_expand_ids expects array<bigint>, got ${other.sql}")
-    }
-
-  override protected def nullSafeEval(input: Any): Any =
-    PairExpandImplIds.pairExpandIds(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.PairExpandImplIds.pairExpandIds($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): PairExpandIds =
-    copy(child = newChild)
-}
-
-object PairExpandImplPacked {
-
-  /** Packed-long sibling of [[PairExpandImplIds.pairExpandIds]] (r17,
-    * guide §2.3 — narrower shuffle/aggregation keys): each ordered pair
-    * (a < b) is emitted as the single long (a << 32) | b instead of a
-    * two-long struct. Grouping on the packed key is bijective with
-    * grouping on (a, b) exactly when every id fits in an unsigned
-    * 32-bit slot, so callers MUST guard on max id < 2³² (and fall back
-    * to the struct kernel past it — the id domain at catalog scale is
-    * a runtime property, not a compile-time one). The kernel re-checks
-    * defensively and throws rather than silently corrupting pairs.
-    */
-  def pairExpandPackedIds(arr: ArrayData): ArrayData = {
-    val n = arr.numElements()
-    val ids = arr.toLongArray()
-    java.util.Arrays.sort(ids)
-    if (n > 0 && (ids(0) < 0L || ids(n - 1) >= (1L << 32)))
-      throw new IllegalArgumentException(
-        s"pair_expand_packed_ids: id out of [0, 2^32): ${ids(0)}..${ids(n - 1)}")
-    val out = new Array[Long](n * (n - 1) / 2)
-    var k = 0
-    var i = 0
-    while (i < n) {
-      val hi = ids(i) << 32
-      var j = i + 1
-      while (j < n) {
-        out(k) = hi | ids(j)
-        k += 1
-        j += 1
-      }
-      i += 1
-    }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-      .fromPrimitiveArray(out)
-  }
-}
-
-/** `pair_expand_packed_ids(array<long>)` → `array<long>` of
-  * (id_a << 32) | id_b, id_a < id_b — the bare-id pair expansion with
-  * a single-long pair key. Caller-guarded: ids must be in [0, 2³²). */
-case class PairExpandPackedIds(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "pair_expand_packed_ids"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"pair_expand_packed_ids expects array<bigint>, got ${other.sql}")
-    }
-
-  override protected def nullSafeEval(input: Any): Any =
-    PairExpandImplPacked.pairExpandPackedIds(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.PairExpandImplPacked.pairExpandPackedIds($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): PairExpandPackedIds =
-    copy(child = newChild)
-}
-
-object AnchorPairExpandImpl {
-
-  /** Anchor-restricted pair expansion (r16, guide §1.2/§2.3): emit ONLY
-    * the ordered pairs (doc_a < doc_b) with at least one endpoint in
-    * `anchors` — the exact subset a downstream anchor-incidence filter
-    * would keep — without materializing the C(n,2) full expansion
-    * first. Identical pair set (and hence identical aggregation
-    * results) to `pairExpand(...)` + filter(endpoint ∈ anchors), by
-    * construction: after the same doc_id sort, pair (i, j), i < j, is
-    * emitted once — from the i-anchor branch when ids(i) ∈ anchors,
-    * else from the j-anchor walk. Cost per posting list drops from
-    * O(n²) to O(n log n + n·|A∩list| + emits); with a human-scale
-    * anchor set (top-K lists) the Σbsz² kernel becomes Σbsz·K-bounded.
-    * `anchors` MUST be sorted ascending (callers pass
-    * `.sorted.toArray`); membership is binary search.
-    */
-  def expand(arr: ArrayData, anchors: Array[Long]): ArrayData = {
-    val n = arr.numElements()
-    val ids = new Array[Long](n)
-    val nshs = new Array[Int](n)
-    var i = 0
-    while (i < n) {
-      val s = arr.getStruct(i, 2)
-      ids(i) = s.getLong(0)
-      nshs(i) = s.getInt(1)
-      i += 1
-    }
-    // insertion sort by doc_id — same canonical order as pairExpand
-    i = 1
-    while (i < n) {
-      val id = ids(i); val ns = nshs(i)
-      var j = i - 1
-      while (j >= 0 && ids(j) > id) {
-        ids(j + 1) = ids(j); nshs(j + 1) = nshs(j); j -= 1
-      }
-      ids(j + 1) = id; nshs(j + 1) = ns
-      i += 1
-    }
-    val aPos = new Array[Int](n)
-    var na = 0
-    i = 0
-    while (i < n) {
-      if (java.util.Arrays.binarySearch(anchors, ids(i)) >= 0) {
-        aPos(na) = i; na += 1
-      }
-      i += 1
-    }
-    // exact output size: anchor rows pair with every later row; a
-    // non-anchor row pairs with the anchors after it (anchor-anchor
-    // pairs counted once, in the first branch)
-    var cnt = 0
-    var ap = 0
-    i = 0
-    while (i < n) {
-      if (ap < na && aPos(ap) <= i) ap += 1
-      if (ap > 0 && aPos(ap - 1) == i) cnt += n - 1 - i
-      else cnt += na - ap
-      i += 1
-    }
-    val out = new Array[Any](cnt)
-    var k = 0
-    ap = 0
-    i = 0
-    while (i < n) {
-      if (ap < na && aPos(ap) <= i) ap += 1
-      if (ap > 0 && aPos(ap - 1) == i) {
-        var j = i + 1
-        while (j < n) {
-          out(k) = new GenericInternalRow(
-            Array[Any](ids(i), nshs(i), ids(j), nshs(j)))
-          k += 1; j += 1
-        }
-      } else {
-        var q = ap
-        while (q < na) {
-          val j = aPos(q)
-          out(k) = new GenericInternalRow(
-            Array[Any](ids(i), nshs(i), ids(j), nshs(j)))
-          k += 1; q += 1
-        }
-      }
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  /** Bare-id sibling of [[expand]] for kernels where no per-item
-    * payload rides the pair (q204's exact co-count). */
-  def expandIds(arr: ArrayData, anchors: Array[Long]): ArrayData = {
-    val n = arr.numElements()
-    val ids = arr.toLongArray()
-    java.util.Arrays.sort(ids)
-    val aPos = new Array[Int](n)
-    var na = 0
-    var i = 0
-    while (i < n) {
-      if (java.util.Arrays.binarySearch(anchors, ids(i)) >= 0) {
-        aPos(na) = i; na += 1
-      }
-      i += 1
-    }
-    var cnt = 0
-    var ap = 0
-    i = 0
-    while (i < n) {
-      if (ap < na && aPos(ap) <= i) ap += 1
-      if (ap > 0 && aPos(ap - 1) == i) cnt += n - 1 - i
-      else cnt += na - ap
-      i += 1
-    }
-    val out = new Array[Any](cnt)
-    var k = 0
-    ap = 0
-    i = 0
-    while (i < n) {
-      if (ap < na && aPos(ap) <= i) ap += 1
-      if (ap > 0 && aPos(ap - 1) == i) {
-        var j = i + 1
-        while (j < n) {
-          out(k) = new GenericInternalRow(Array[Any](ids(i), ids(j)))
-          k += 1; j += 1
-        }
-      } else {
-        var q = ap
-        while (q < na) {
-          out(k) = new GenericInternalRow(Array[Any](ids(i), ids(aPos(q).toInt)))
-          k += 1; q += 1
-        }
-      }
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-}
-
-/** `anchor_pair_expand(array<struct<doc_id:long, nsh:int>>)` →
-  * `array<struct<doc_a, nsh_a, doc_b, nsh_b>>`, doc_a < doc_b, at
-  * least one endpoint in the (driver-supplied, human-scale) anchor
-  * set. Semantically = PairExpand + anchor-incidence filter.
-  */
-case class AnchorPairExpand(child: Expression, anchors: Seq[Long])
-    extends UnaryExpression {
-  @transient private lazy val sortedAnchors: Array[Long] =
-    anchors.toArray.sorted
-
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("doc_a", LongType, nullable = false),
-    StructField("nsh_a", IntegerType, nullable = false),
-    StructField("doc_b", LongType, nullable = false),
-    StructField("nsh_b", IntegerType, nullable = false))), containsNull = false)
-  override def prettyName: String = "anchor_pair_expand"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StructType(fields), _)
-          if fields.length == 2 && fields(0).dataType == LongType &&
-            fields(1).dataType == IntegerType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"anchor_pair_expand expects array<struct<bigint, int>>, got ${other.sql}")
-    }
-
-  override protected def nullSafeEval(input: Any): Any =
-    AnchorPairExpandImpl.expand(input.asInstanceOf[ArrayData], sortedAnchors)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("anchors", sortedAnchors, "long[]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.AnchorPairExpandImpl.expand($c, $ref)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): AnchorPairExpand =
-    copy(child = newChild)
-}
-
-/** `anchor_pair_expand_ids(array<long>)` → `array<struct<id_a, id_b>>`,
-  * id_a < id_b, at least one endpoint in the anchor set. */
-case class AnchorPairExpandIds(child: Expression, anchors: Seq[Long])
-    extends UnaryExpression {
-  @transient private lazy val sortedAnchors: Array[Long] =
-    anchors.toArray.sorted
-
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("id_a", LongType, nullable = false),
-    StructField("id_b", LongType, nullable = false))), containsNull = false)
-  override def prettyName: String = "anchor_pair_expand_ids"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"anchor_pair_expand_ids expects array<bigint>, got ${other.sql}")
-    }
-
-  override protected def nullSafeEval(input: Any): Any =
-    AnchorPairExpandImpl.expandIds(input.asInstanceOf[ArrayData], sortedAnchors)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("anchors", sortedAnchors, "long[]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.AnchorPairExpandImpl.expandIds($c, $ref)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): AnchorPairExpandIds =
-    copy(child = newChild)
-}
-
 object PairExpandFunctions {
-  def pairExpand(c: Column): Column =
-    ColumnBridge.column(PairExpand(ColumnBridge.expression(c)))
-  def pairExpandIds(c: Column): Column =
-    ColumnBridge.column(PairExpandIds(ColumnBridge.expression(c)))
-  def pairExpandPackedIds(c: Column): Column =
-    ColumnBridge.column(PairExpandPackedIds(ColumnBridge.expression(c)))
+  private def expansion(c: Column, encoding: PairEncoding,
+      anchors: Option[Seq[Long]]): Column =
+    ColumnBridge.column(PairExpansion(ColumnBridge.expression(c), encoding, anchors))
+
+  def pairExpand(c: Column): Column = expansion(c, PairEncoding.Payload, None)
+  def pairExpandIds(c: Column): Column = expansion(c, PairEncoding.Ids, None)
+  def pairExpandPackedIds(c: Column): Column = expansion(c, PairEncoding.Packed, None)
   def anchorPairExpand(c: Column, anchors: Seq[Long]): Column =
-    ColumnBridge.column(AnchorPairExpand(ColumnBridge.expression(c), anchors))
+    expansion(c, PairEncoding.Payload, Some(anchors))
   def anchorPairExpandIds(c: Column, anchors: Seq[Long]): Column =
-    ColumnBridge.column(AnchorPairExpandIds(ColumnBridge.expression(c), anchors))
+    expansion(c, PairEncoding.Ids, Some(anchors))
   def simhashBucketPairs(c: Column, bitsPerBand: Int, nBands: Int,
       maxHamming: Int): Column =
     ColumnBridge.column(SimhashBucketPairs(

@@ -1186,167 +1186,6 @@ object TextAnalysis extends QueryModule {
       |SELECT doc_id, lang, rank::INT AS rank, word, round(score, 4) AS tfidf
       |FROM ranked WHERE rank <= 3 ORDER BY doc_id, rank""".stripMargin
 
-  // --- denylist / PII-pattern scrubbing ---------------------------------
-
-  /** Scrub pattern: a term denylist plus the usual PII shapes (emails,
-    * digit runs ≥7 — phone/SSN-ish). The synthetic corpus only triggers
-    * the denylist branch; the PII alternatives keep the operator honest
-    * about what a production scrub matches. RE2-compatible (no
-    * lookarounds) so Java regex and the DuckDB oracle agree.
-    */
-  private val scrubPattern =
-    "\\b(customer|table|key)\\b|[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}|[0-9]{7,}"
-
-  /** q88: denylist/PII scrub audit — one regexp pass flags and redacts
-    * every document (replacement token `[X]`), then a per-source audit:
-    * docs flagged, total hits, net character delta of the redaction.
-    * This is the content-scrubbing stage of a training-data pipeline
-    * (denylist terms, emails, long digit runs) expressed as pure
-    * codegen'd expressions — two regexp kernels per row, no UDF, no
-    * shuffle before the final per-source partial aggregation.
-    */
-  def scrubAudit(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
-      .withColumn("hits", regexp_count(col("text"), lit(scrubPattern)))
-      .withColumn("clean", regexp_replace(col("text"), scrubPattern, "[X]"))
-      .groupBy(col("source"))
-      .agg(
-        count(lit(1)).as("n_docs"),
-        sum(when(col("hits") > 0, 1L).otherwise(0L)).as("n_flagged"),
-        sum(col("hits")).as("total_hits"),
-        sum((length(col("text")) - length(col("clean"))).cast("long")).as("chars_removed"))
-      .select(col("source"), col("n_docs").cast("bigint").as("n_docs"),
-        col("n_flagged").cast("bigint").as("n_flagged"),
-        col("total_hits").cast("bigint").as("total_hits"),
-        col("chars_removed").cast("bigint").as("chars_removed"))
-      .orderBy(col("source"))
-
-  private val scrubAuditSql =
-    """WITH d AS (
-      |  SELECT source,
-      |    len(regexp_extract_all(text,
-      |      '\b(customer|table|key)\b|[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}|[0-9]{7,}')) AS hits,
-      |    length(text) - length(regexp_replace(text,
-      |      '\b(customer|table|key)\b|[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}|[0-9]{7,}',
-      |      '[X]', 'g')) AS removed
-      |  FROM documents
-      |)
-      |SELECT source, count(*)::BIGINT AS n_docs,
-      |  sum(CASE WHEN hits > 0 THEN 1 ELSE 0 END)::BIGINT AS n_flagged,
-      |  sum(hits)::BIGINT AS total_hits,
-      |  sum(removed)::BIGINT AS chars_removed
-      |FROM d GROUP BY source ORDER BY source""".stripMargin
-
-  // --- token-distribution entropy ---------------------------------------
-
-  /** q89: per-source unigram Shannon entropy — the vocabulary-diversity
-    * signal curation pipelines use to spot template/boilerplate farms
-    * (low entropy) before they dominate a mixture. H = ln N − Σc·ln c / N
-    * over the source's token counts, plus the vocab-normalized form.
-    *
-    * Scale shape: the only shuffle is keyed on (source, word) — bounded
-    * by vocabulary, not corpus size — and the entropy reduction itself
-    * is one row per source. Everything upstream is map-side explode.
-    */
-  def tokenEntropy(spark: SparkSession, dir: String): DataFrame = {
-    val counts = Tables.documents(spark, dir)
-      .select(col("source"), explode(tokens(col("text"))).as("word"))
-      .groupBy(col("source"), col("word"))
-      .agg(count(lit(1)).as("c"))
-    counts.groupBy(col("source"))
-      .agg(sum(col("c")).as("n_tokens"),
-        count(lit(1)).as("n_distinct"),
-        sum(col("c").cast("double") * log(col("c").cast("double"))).as("clogc"))
-      .select(col("source"),
-        col("n_tokens").cast("bigint").as("n_tokens"),
-        col("n_distinct").cast("bigint").as("n_distinct"),
-        round(log(col("n_tokens").cast("double")) - col("clogc") / col("n_tokens"), 4)
-          .as("entropy"),
-        round((log(col("n_tokens").cast("double")) - col("clogc") / col("n_tokens"))
-          / log(col("n_distinct").cast("double")), 4).as("norm_entropy"))
-      .orderBy(col("source"))
-  }
-
-  private val tokenEntropySql =
-    """WITH w AS (
-      |  SELECT source, unnest(string_split(text, ' ')) AS word FROM documents
-      |), c AS (
-      |  SELECT source, word, count(*)::BIGINT AS c FROM w GROUP BY 1, 2
-      |), s AS (
-      |  SELECT source, sum(c)::BIGINT AS n_tokens, count(*)::BIGINT AS n_distinct,
-      |    sum(c::DOUBLE * ln(c::DOUBLE)) AS clogc
-      |  FROM c GROUP BY source
-      |)
-      |SELECT source, n_tokens, n_distinct,
-      |  round(ln(n_tokens::DOUBLE) - clogc / n_tokens, 4) AS entropy,
-      |  round((ln(n_tokens::DOUBLE) - clogc / n_tokens) / ln(n_distinct::DOUBLE), 4)
-      |    AS norm_entropy
-      |FROM s ORDER BY source""".stripMargin
-
-  // --- bigram collocations (PMI) ----------------------------------------
-
-  /** q92: bigram pointwise mutual information — the collocation-mining
-    * pass tokenizer/vocab builders run to find multi-word units worth
-    * merging. PMI(x,y) = ln( p(x,y) / (p(x)·p(y)) ) with bigram
-    * probability over adjacent pairs and unigram probabilities over the
-    * token stream; only bigrams seen ≥5 times are reported (no float
-    * top-k cut, so the output is fully deterministic).
-    *
-    * Scale shape: unigram and bigram count tables are bounded by |vocab|
-    * and |vocab|² — tiny relative to any corpus — so both count joins
-    * broadcast; corpus-side work is map-only explode. The two corpus
-    * totals ride along as a broadcast crossJoin.
-    */
-  def bigramPmi(spark: SparkSession, dir: String): DataFrame = {
-    val toks = Tables.documents(spark, dir)
-      .select(tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) >= 2)
-    val bigrams = toks.select(explode(
-        transform(sequence(lit(1), size(col("toks")) - 1),
-          i => struct(element_at(col("toks"), i).as("w1"),
-            element_at(col("toks"), i + 1).as("w2")))).as("b"))
-      .select(col("b.w1"), col("b.w2"))
-    val words = toks.select(explode(col("toks")).as("word"))
-    val uni = words.groupBy(col("word")).agg(count(lit(1)).as("cw"))
-    val nTok = words.agg(count(lit(1)).as("n_tok"))
-    val nBig = bigrams.agg(count(lit(1)).as("n_big"))
-    bigrams.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c_xy"))
-      .filter(col("c_xy") >= 5)
-      .join(broadcast(uni.withColumnRenamed("word", "w1").withColumnRenamed("cw", "c_x")), Seq("w1"))
-      .join(broadcast(uni.withColumnRenamed("word", "w2").withColumnRenamed("cw", "c_y")), Seq("w2"))
-      .crossJoin(broadcast(nTok)).crossJoin(broadcast(nBig))
-      .select(col("w1"), col("w2"), col("c_xy").cast("bigint").as("c_xy"),
-        round(log((col("c_xy").cast("double") * col("n_tok") * col("n_tok"))
-          / (col("n_big").cast("double") * col("c_x") * col("c_y"))), 4).as("pmi"))
-      .orderBy(col("w1"), col("w2"))
-  }
-
-  private val bigramPmiSql =
-    """WITH t AS (
-      |  SELECT string_split(text, ' ') AS toks FROM documents
-      |  WHERE len(string_split(text, ' ')) >= 2
-      |), b AS (
-      |  SELECT toks[i] AS w1, toks[i+1] AS w2
-      |  FROM t, unnest(generate_series(1, len(toks) - 1)) AS g(i)
-      |), w AS (
-      |  SELECT unnest(toks) AS word FROM t
-      |), uni AS (
-      |  SELECT word, count(*)::BIGINT AS cw FROM w GROUP BY word
-      |), tot AS (
-      |  SELECT (SELECT count(*) FROM w)::BIGINT AS n_tok,
-      |         (SELECT count(*) FROM b)::BIGINT AS n_big
-      |), big AS (
-      |  SELECT w1, w2, count(*)::BIGINT AS c_xy FROM b GROUP BY w1, w2
-      |  HAVING count(*) >= 5
-      |)
-      |SELECT big.w1, big.w2, big.c_xy,
-      |  round(ln((big.c_xy::DOUBLE * tot.n_tok * tot.n_tok)
-      |    / (tot.n_big::DOUBLE * ux.cw * uy.cw)), 4) AS pmi
-      |FROM big, tot
-      |JOIN uni ux ON big.w1 = ux.word
-      |JOIN uni uy ON big.w2 = uy.word
-      |ORDER BY big.w1, big.w2""".stripMargin
-
   /** Shard writer — the output stage of a curation run: hash-balanced
     * shards (id-hash partitioning, so shard sizes stay even regardless
     * of source/length skew and re-runs land identical shard contents),
